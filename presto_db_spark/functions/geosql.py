@@ -23,7 +23,7 @@ Documented deviations (same model as the operator modules):
 * ``ST_Centroid`` is the signed-area centroid for polygons (the
   reference formula), the vertex mean for linestrings/multipoints (the
   reference weights linestrings by segment length);
-* single-ring polygons (holes/MULTI* live in the wkt2 operator slice).
+* single-ring polygons (holes/MULTI* live in the wkt operator module).
 """
 
 from __future__ import annotations
@@ -304,7 +304,7 @@ def _register_wkb_codecs(spark: SparkSession) -> None:
     for ARBITRARY doubles: Arrow-batched pandas UDFs over ``struct`` —
     a serialization codec (the same exception class as the BMP/WAV
     multimodal codecs), never a relational hot path.  The exact-integer
-    pure-SQL encoding lives in ``operators/wkt6.py``."""
+    pure-SQL encoding lives in ``operators/wkt.py``."""
     import struct as _struct
 
     from pyspark.sql.functions import pandas_udf

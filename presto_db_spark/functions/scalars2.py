@@ -45,8 +45,6 @@ import unicodedata
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-_B = bytes  # UDF binary params arrive as bytearray; normalize with bytes()
-
 SQL_FUNCTIONS_2 = [
     # BitwiseFunctions.java (two's-complement 64-bit, like Java longs).
     "CREATE OR REPLACE TEMPORARY FUNCTION bitwise_and(x BIGINT, y BIGINT) "
@@ -294,7 +292,7 @@ def _inverse_normal_cdf(mean, sd, p):
 
 
 # --- ip prefix family (IpPrefixFunctions.java; address-as-string model,
-# consistent with the ipaddress rows in functions_corpus3) -------------------
+# consistent with the ipaddress rows in functions_corpus) --------------------
 
 def _ip_prefix(ip, bits):
     if ip is None or bits is None:

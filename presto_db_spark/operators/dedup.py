@@ -34,16 +34,17 @@ from __future__ import annotations
 
 import os
 import re
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
+from ..registry import QueryFn, registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+_q = registrar(QUERIES, ORACLE)
 
 MOD50 = 2**50  # rolling-hash modulus (see operators/text.py)
 MERSENNE31 = 2**31 - 1  # minhash permutation modulus
@@ -52,18 +53,6 @@ MERSENNE31 = 2**31 - 1  # minhash permutation modulus
 # the oracle SQL embeds the same numbers.
 MINHASH_PERMS = [(2 * k + 1, 12289 * (k + 1) % MERSENNE31) for k in range(16)]
 N_BANDS, ROWS_PER_BAND = 4, 4
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def _fanout(raw_docs: DataFrame, spark: SparkSession) -> DataFrame:
@@ -1293,7 +1282,6 @@ def dedup_fuzzy_del1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Bloom-filter ingestion prefilter (incremental dedup membership) ---------
 
-_BLOOM_WORDS = 64          # 32-bit words → 2048 bits
 _BLOOM_OFFSETS = (1, 7, 13)  # md5 hex offsets → 3 independent 24-bit probes
 
 

@@ -23,30 +23,18 @@ oracle value-checks everything.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..registry import QueryFn, registrar
 from .tpch import _t
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+_q = registrar(QUERIES, ORACLE)
 
 RADIUS = 3.0
 GRID = RADIUS  # cell width == radius → adjacency covers all candidate pairs
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 # Deterministic synthetic coordinates in a 100×100 plane.
@@ -406,29 +394,6 @@ def geo_polygon_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Bing tiles (BingTileFunctions.java) -----------------------------------
-#
-# bing_tile_at / bing_tile_coordinates / bing_tile_quadkey / bing_tile
-# (from quadkey) / tile→lat-lon corners, as pure integer/double
-# expressions (the reference's web-mercator math, BingTileFunctions.java:
-# 617-657 longitudeToTileX/Y, 600-609 tileXYToLatitudeLongitude;
-# quadkey bit-interleave BingTile.java). mapSize = 256·2^zoom; shifts are
-# spelled as DIV-by-power-of-2 so Spark and DuckDB evaluate identically.
-
-def _bing_sql(lat: str, lon: str, zoom: str) -> dict[str, str]:
-    """DuckDB/ANSI spellings of the tile pipeline (also valid Spark SQL
-    except list_* / generate_series, swapped below)."""
-    map_size = f"(256 * CAST(pow(2, {zoom}) AS BIGINT))"
-    xaxis = f"(({lon} + 180) / 360)"
-    sinlat = f"sin({lat} * pi() / 180)"
-    yaxis = f"(0.5 - ln((1 + {sinlat}) / (1 - {sinlat})) / (4 * pi()))"
-    tx = (
-        f"CAST(least(greatest({xaxis} * {map_size}, 0), {map_size} - 1) AS BIGINT) // 256"
-    )
-    ty = (
-        f"CAST(least(greatest({yaxis} * {map_size}, 0), {map_size} - 1) AS BIGINT) // 256"
-    )
-    return {"tx": tx, "ty": ty}
-
 
 @_q(
     "geo_bing_tiles",

@@ -21,7 +21,7 @@ Design for scale:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -30,21 +30,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
+from ..registry import QueryFn, registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = registrar(QUERIES, ORACLE)
 
 
 FEATURE_SCHEMA = T.StructType(

@@ -20,8 +20,6 @@ keeps the contract deterministic so both engines agree exactly).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,22 +27,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
+from ..registry import QueryFn, registrar
 from .tpch import _t
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = registrar(QUERIES, ORACLE)
 
 
 @_q(

@@ -19,13 +19,12 @@ paid for the composition (Catalyst pipelines the gates into the scans).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
+from ..registry import QueryFn, registrar
 from .dedup import (
     MERSENNE31,
     MINHASH_PERMS,
@@ -38,20 +37,9 @@ from .dedup import (
     _SQL_ROLL,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = registrar(QUERIES, ORACLE)
 
 
 LANGS = ("en", "es", "de", "fr")

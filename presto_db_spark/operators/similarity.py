@@ -24,32 +24,20 @@ in the last ulp.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, small_df
+from ..registry import QueryFn, registrar
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+_q = registrar(QUERIES, ORACLE)
 
 N_QUERIES = 10  # vec_id < N_QUERIES form the query set
 TOP_K = 5
 DIM = 64
 N_PLANES = 8  # LSH: 8 hyperplanes → 256 buckets
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 _EMB_FANOUT_MIN_BYTES = 256 << 20  # one shuffle only pays off past this
@@ -201,21 +189,6 @@ def _srp_bucket_impl(e):
             sums[p] += x * coeffs[p][d]
     out = np.where(sums >= 0, "1", "0")
     return pd.Series(["".join(out[:, r]) for r in range(n)])
-
-
-def _plane_sign(e: Column, p: int) -> Column:
-    # Kept as the single-plane expression form for composition/tests; the
-    # operators use _srp_bucket_pd (one batch pass for all planes).
-    return F.aggregate(
-        F.zip_with(
-            e,
-            F.sequence(F.lit(1), F.lit(DIM)),
-            lambda x, i: x.cast("double")
-            * F.when((i * 2654435761 + p * 40503) % 97 % 2 == 0, 1.0).otherwise(-1.0),
-        ),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
 
 
 # --- brute-force exact top-k -----------------------------------------------
@@ -1091,9 +1064,6 @@ def _l2_pd():
     if _L2_UDF is None:
         _L2_UDF = F.pandas_udf(_l2_impl, "double")
     return _L2_UDF
-
-
-_PQ_ENCODE_UDF = None
 
 
 def _pq_encode_impl_factory(cb):

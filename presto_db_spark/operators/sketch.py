@@ -23,29 +23,17 @@
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..registry import QueryFn, registrar
 from .tpch import _t
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+_q = registrar(QUERIES, ORACLE)
 
 BIN = 100.0  # sketch grid width over l_extendedprice (domain ~[900, 105000])
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def sketch_histogram(

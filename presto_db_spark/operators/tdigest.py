@@ -34,33 +34,21 @@ are deterministic under any partition layout.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..registry import QueryFn, registrar
 from .tpch import _t
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+_q = registrar(QUERIES, ORACLE)
 
 COMPRESSION = 200.0  # ≤ ~2c centroids; worst-case rank error ≈ π/c ≈ 0.016
 EPS = 0.05  # contract band half-width; ~3× the two-level worst case
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def build_digest(

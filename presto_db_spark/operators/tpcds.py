@@ -1,4 +1,4 @@
-"""TPC-DS adapted subset — star-schema shapes on the driver testdata.
+"""TPC-DS adapted, all 99 queries — star-schema shapes on the TPC-H test data.
 
 The reference ships TPC-DS q01-q99 as benchmarks and product tests
 (``presto-benchto-benchmarks/src/main/resources/sql/presto/tpcds/*.sql``,
@@ -35,33 +35,17 @@ text to pin equivalence.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
-from .tpch import _csum, _csum_sql, _msum, _msum_sql
+from ..registry import QueryFn, registrar
+from .tpch import _csum, _csum_sql, _msum, _msum_sql, _t
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
+_q = registrar(QUERIES, ORACLE)
 
 
 def _rev():
@@ -645,9 +629,6 @@ def tpcds_q48(spark: SparkSession, sf_dir: str) -> DataFrame:
 # l_returnflag N = store_sales, A = catalog_sales, R = web_sales (three
 # disjoint row sets over the same fact, like TPC-DS's three channel facts).
 # ---------------------------------------------------------------------------
-
-_CHANNEL = {"store": "N", "catalog": "A", "web": "R"}
-
 
 def _channel_cust_dates_sql(flag: str) -> str:
     return f"""
@@ -3573,5 +3554,3114 @@ def tpcds_q47(spark: SparkSession, sf_dir: str) -> DataFrame:
             "psum", "nsum",
         )
         .orderBy("i_category", "i_brand", "d_year", "d_moy")
+        .limit(100)
+    )
+
+
+# ===========================================================================
+# The 45 queries that complete the corpus at 99/99: q15 q16 q20 q21 q22 q24 q25 q26 q27 q28 q29 q30 q32 q37
+# q39 q40 q41 q43 q46 q53 q56 q57 q60 q62 q63 q64 q68 q69 q70 q71 q72 q73
+# q74 q77 q80 q81 q82 q83 q84 q85 q89 q91 q94 q98 q99.
+#
+# Same conventions as above: each query preserves the
+# reference's SHAPE (join topology, CTE structure, windowing, correlated
+# predicates — cited per query from
+# ``presto-benchto-benchmarks/src/main/resources/sql/presto/tpcds/qNN.sql``)
+# re-targeted onto the driver's TPC-H-ish tables:
+#
+# * store_sales → lineitem ⋈ orders (revenue ``_rev()``); catalog/web
+#   channels → tax/totalprice expressions (as q04/q11 established);
+# * returns → ``l_returnflag = 'R'`` rows;
+# * item → part, store/warehouse → supplier, address state/city → nation,
+#   date_dim roles → functions of o_orderdate / l_shipdate;
+# * every float aggregate uses the exact-cents idiom (``_msum``/``_csum``)
+#   so Spark and DuckDB agree bit-for-bit;
+# * every LIMIT query carries a deterministic total ORDER BY in BOTH
+#   engines.
+# ===========================================================================
+
+
+# --- q15: customer catalog revenue under an OR'd geography/amount gate -----
+
+@_q(
+    "tpcds_q15",
+    f"""
+SELECT n.n_name AS ca_zip, {_msum_sql("l.l_extendedprice")} AS sum_sales
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+WHERE (c.c_nationkey IN (1, 3, 5) OR c.c_mktsegment IN ('BUILDING', 'MACHINERY')
+       OR round(l.l_extendedprice * 100) > 5000000)
+  AND year(o.o_orderdate) = 1996 AND quarter(o.o_orderdate) = 2
+GROUP BY n.n_name
+ORDER BY n.n_name ASC
+LIMIT 100
+""",
+)
+def tpcds_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q15 shape (tpcds/q15.sql: catalog sales by customer zip for
+    one quarter, where the customer qualifies through an OR of zip
+    prefixes, states, or a per-line amount — the disjunct spans two
+    tables, so it must stay a residual above the join). Geography analog:
+    nation for zip/state, exact-cents threshold for the amount leg.
+    Scale: customer/nation broadcast; one aggregation shuffle."""
+    li, orders, cust, nation = _t(spark, sf_dir, "lineitem", "orders", "customer", "nation")
+    j = (
+        li.join(orders.filter((F.year("o_orderdate") == 1996) & (F.quarter("o_orderdate") == 2)),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
+        .filter(
+            F.col("c_nationkey").isin(1, 3, 5)
+            | F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
+            | (F.round(F.col("l_extendedprice") * 100) > 5000000)
+        )
+    )
+    return (
+        j.groupBy(F.col("n_name").alias("ca_zip"))
+        .agg(_msum(F.col("l_extendedprice")).alias("sum_sales"))
+        .orderBy(F.asc("ca_zip"))
+        .limit(100)
+    )
+
+
+# --- q98 / q20: item revenue share of its class (window over grouped agg) --
+
+def _revenue_share(spark, sf_dir, amount, amount_sql, cats, date_lo, date_hi, limit):
+    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    j = (
+        li.join(orders.filter(F.col("o_orderdate").between(date_lo, date_hi)),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(part.filter(F.col("p_type").isin(*cats)), F.col("l_partkey") == F.col("p_partkey"))
+    )
+    g = j.groupBy(
+        F.col("p_partkey").alias("i_item_id"),
+        F.col("p_name").alias("i_item_desc"),
+        F.col("p_type").alias("i_category"),
+        F.col("p_brand").alias("i_class"),
+        F.col("p_retailprice").alias("i_current_price"),
+    ).agg(
+        _msum(amount).alias("itemrevenue"),
+        # the class-share window re-sums revenues in arbitrary order; only
+        # integer cents are order-independent, so the ratio is cents/cents
+        _csum(amount).alias("_itemrev_c"),
+    )
+    w = W.partitionBy("i_class")
+    out = g.withColumn(
+        "revenueratio",
+        F.col("_itemrev_c") * 100 / F.sum("_itemrev_c").over(w),
+    ).drop("_itemrev_c")
+    out = out.orderBy(
+        F.asc("i_category"), F.asc("i_class"), F.asc("i_item_id"),
+        F.asc("i_item_desc"), F.asc("revenueratio"),
+    )
+    return out.limit(limit) if limit else out
+
+
+def _revenue_share_sql(amount_sql, cats, date_lo, date_hi, limit):
+    cats_sql = ", ".join(f"'{c}'" for c in cats)
+    lim = f"LIMIT {limit}" if limit else ""
+    return f"""
+SELECT p.p_partkey AS i_item_id, p.p_name AS i_item_desc, p.p_type AS i_category,
+       p.p_brand AS i_class, p.p_retailprice AS i_current_price,
+       {_msum_sql(amount_sql)} AS itemrevenue,
+       {_csum_sql(amount_sql)} * 100 / sum({_csum_sql(amount_sql)}) OVER (PARTITION BY p.p_brand) AS revenueratio
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN part p ON l.l_partkey = p.p_partkey
+WHERE o.o_orderdate BETWEEN '{date_lo}' AND '{date_hi}'
+  AND p.p_type IN ({cats_sql})
+GROUP BY 1, 2, 3, 4, 5
+ORDER BY i_category ASC, i_class ASC, i_item_id ASC, i_item_desc ASC, revenueratio ASC
+{lim}
+"""
+
+
+_Q98_CATS = ("STANDARD", "SMALL", "ECONOMY")
+
+
+@_q("tpcds_q98", _revenue_share_sql(_REV_SQL, _Q98_CATS, "1996-02-22", "1996-03-23", 0))
+def tpcds_q98(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q98 shape (tpcds/q98.sql: store-channel item revenue and its
+    share of the class total — an agg-over-window on a grouped frame, NO
+    LIMIT in the reference). The share divides two exact-cent integers so
+    both engines emit identical doubles. Scale: one grouping shuffle; the
+    class window re-partitions the (small) grouped frame only."""
+    return _revenue_share(spark, sf_dir, _rev(), _REV_SQL, _Q98_CATS,
+                          "1996-02-22", "1996-03-23", 0)
+
+
+@_q("tpcds_q20", _revenue_share_sql("l_extendedprice", _Q20_CATS := (
+    "STANDARD", "LARGE", "PROMO"),
+    "1997-02-22", "1997-03-23", 100))
+def tpcds_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q20 shape (tpcds/q20.sql: the catalog-channel twin of q98 —
+    same class-share window, LIMIT 100). Catalog amount analog:
+    l_extendedprice (undiscounted), distinct category set and window."""
+    return _revenue_share(spark, sf_dir, F.col("l_extendedprice"), "l_extendedprice",
+                          _Q20_CATS, "1997-02-22", "1997-03-23", 100)
+
+
+# --- q53 / q63: rolling category deviation from the per-key mean -----------
+
+_BANDS_SQL = (
+    "((p.p_type IN ('STANDARD', 'SMALL') "
+    "AND p.p_brand IN ('Brand#11', 'Brand#12', 'Brand#13', 'Brand#14', 'Brand#15')) "
+    "OR (p.p_type IN ('ECONOMY', 'MEDIUM') "
+    "AND p.p_brand IN ('Brand#21', 'Brand#22', 'Brand#23', 'Brand#24', 'Brand#25')))"
+)
+
+
+def _bands_col():
+    return (
+        F.col("p_type").isin("STANDARD", "SMALL")
+        & F.col("p_brand").isin("Brand#11", "Brand#12", "Brand#13", "Brand#14", "Brand#15")
+    ) | (
+        F.col("p_type").isin("ECONOMY", "MEDIUM")
+        & F.col("p_brand").isin("Brand#21", "Brand#22", "Brand#23", "Brand#24", "Brand#25")
+    )
+
+
+def _deviation(spark, sf_dir, key_col, key_name, period_col):
+    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    j = (
+        li.join(orders.filter(F.year("o_orderdate") == 1996),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(part.filter(_bands_col()), F.col("l_partkey") == F.col("p_partkey"))
+    )
+    g = j.groupBy(key_col.alias(key_name), period_col.alias("period")).agg(
+        _msum(F.col("l_extendedprice")).alias("sum_sales"),
+        # the per-key window re-sums these in arbitrary order; only integer
+        # cents sum order-independently, so the window runs over cents
+        _csum(F.col("l_extendedprice")).alias("_c"),
+    )
+    w = W.partitionBy(key_name)
+    v = (
+        g.withColumn("key_sum_c", F.sum("_c").over(w))
+        .withColumn("key_cnt", F.count("*").over(w))
+        # one exact-integer division at the end — bit-identical across engines
+        .withColumn("avg_sales",
+                    F.col("key_sum_c") / (100 * F.col("key_cnt")))
+    )
+    # abs(sum − avg)/avg > 0.1 cross-multiplied into exact integers:
+    # 10·|c·cnt − key_sum_c| > key_sum_c  (key_sum_c > 0 by the >0 gate)
+    return v.filter(
+        (F.col("key_sum_c") > 0)
+        & (10 * F.abs(F.col("_c") * F.col("key_cnt") - F.col("key_sum_c"))
+           > F.col("key_sum_c"))
+    ).select(key_name, "period", "sum_sales", "avg_sales")
+
+
+def _deviation_sql(key_sql, key_name, period_sql):
+    return f"""
+WITH g AS (
+  SELECT {key_sql} AS {key_name}, {period_sql} AS period,
+         {_msum_sql("l.l_extendedprice")} AS sum_sales,
+         {_csum_sql("l.l_extendedprice")} AS c
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN part p ON l.l_partkey = p.p_partkey
+  WHERE year(o.o_orderdate) = 1996 AND {_BANDS_SQL}
+  GROUP BY 1, 2
+), v AS (
+  SELECT {key_name}, period, sum_sales, c,
+         sum(c) OVER (PARTITION BY {key_name}) AS key_sum_c,
+         count(*) OVER (PARTITION BY {key_name}) AS key_cnt
+  FROM g
+)
+SELECT {key_name}, period, sum_sales,
+       CAST(key_sum_c AS DOUBLE) / (100 * key_cnt) AS avg_sales
+FROM v
+WHERE key_sum_c > 0 AND 10 * abs(c * key_cnt - key_sum_c) > key_sum_c
+"""
+
+
+@_q(
+    "tpcds_q53",
+    _deviation_sql("p.p_size", "i_manufact_id", "quarter(o.o_orderdate)")
+    + "ORDER BY avg_sales ASC, sum_sales ASC, i_manufact_id ASC, period ASC LIMIT 100",
+)
+def tpcds_q53(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q53 shape (tpcds/q53.sql: quarterly manufacturer sales that
+    deviate >10% from the manufacturer's mean — agg-over-window above a
+    grouped frame gated by a two-band disjunctive (category, class,
+    brand) filter). Deviation is the exact cross-multiplied integer test.
+    Scale: band filter prunes part before the join; one grouping shuffle;
+    window over the small grouped frame."""
+    v = _deviation(spark, sf_dir, F.col("p_size"), "i_manufact_id",
+                   F.quarter("o_orderdate"))
+    return v.orderBy(F.asc("avg_sales"), F.asc("sum_sales"),
+                     F.asc("i_manufact_id"), F.asc("period")).limit(100)
+
+
+@_q(
+    "tpcds_q63",
+    _deviation_sql("p.p_partkey % 100", "i_manager_id", "month(o.o_orderdate)")
+    + "ORDER BY i_manager_id ASC, avg_sales ASC, sum_sales ASC, period ASC LIMIT 100",
+)
+def tpcds_q63(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q63 shape (tpcds/q63.sql: q53's monthly twin keyed by
+    manager — same disjunctive band gate, deviation vs the manager's
+    monthly mean, manager-first ordering)."""
+    v = _deviation(spark, sf_dir, F.col("p_partkey") % 100, "i_manager_id",
+                   F.month("o_orderdate"))
+    return v.orderBy(F.asc("i_manager_id"), F.asc("avg_sales"),
+                     F.asc("sum_sales"), F.asc("period")).limit(100)
+
+
+# --- q62 / q99: ship-latency bucket matrix ---------------------------------
+
+def _latency_buckets(spark, sf_dir, year, third_col, third_name):
+    li, orders, supp = _t(spark, sf_dir, "lineitem", "orders", "supplier")
+    lat = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
+    j = (
+        li.join(orders.filter(F.year("o_orderdate") == year),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+    )
+    cnt = lambda cond: F.sum(F.when(cond, 1).otherwise(0))  # noqa: E731
+    return (
+        j.groupBy(
+            F.substring("s_name", 1, 20).alias("warehouse"),
+            F.col("l_returnflag").alias("sm_type"),
+            third_col.alias(third_name),
+        )
+        .agg(
+            cnt(lat <= 30).alias("d30"),
+            cnt((lat > 30) & (lat <= 60)).alias("d31_60"),
+            cnt((lat > 60) & (lat <= 90)).alias("d61_90"),
+            cnt((lat > 90) & (lat <= 120)).alias("d91_120"),
+            cnt(lat > 120).alias("dgt120"),
+        )
+        .orderBy(F.asc("warehouse"), F.asc("sm_type"), F.asc(third_name))
+        .limit(100)
+    )
+
+
+def _latency_sql(year, third_sql, third_name):
+    lat = "datediff('day', o.o_orderdate, l.l_shipdate)"
+    return f"""
+SELECT substr(s.s_name, 1, 20) AS warehouse, l.l_returnflag AS sm_type,
+       {third_sql} AS {third_name},
+       CAST(sum(CASE WHEN {lat} <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS d30,
+       CAST(sum(CASE WHEN {lat} > 30 AND {lat} <= 60 THEN 1 ELSE 0 END) AS BIGINT) AS d31_60,
+       CAST(sum(CASE WHEN {lat} > 60 AND {lat} <= 90 THEN 1 ELSE 0 END) AS BIGINT) AS d61_90,
+       CAST(sum(CASE WHEN {lat} > 90 AND {lat} <= 120 THEN 1 ELSE 0 END) AS BIGINT) AS d91_120,
+       CAST(sum(CASE WHEN {lat} > 120 THEN 1 ELSE 0 END) AS BIGINT) AS dgt120
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN supplier s ON l.l_suppkey = s.s_suppkey
+WHERE year(o.o_orderdate) = {year}
+GROUP BY 1, 2, 3
+ORDER BY warehouse ASC, sm_type ASC, {third_name} ASC
+LIMIT 100
+"""
+
+
+@_q("tpcds_q62", _latency_sql(1996, "o.o_orderpriority", "web_name"))
+def tpcds_q62(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q62 shape (tpcds/q62.sql: web-channel order→ship latency
+    bucketed 30/60/90/120 days per (warehouse prefix, ship mode, site) —
+    a conditional-count matrix over one fact scan). Latency analog:
+    datediff(l_shipdate, o_orderdate); ship-mode analog l_returnflag.
+    Scale: pure scan + one grouping shuffle — no per-bucket re-scan."""
+    return _latency_buckets(spark, sf_dir, 1996, F.col("o_orderpriority"), "web_name")
+
+
+@_q("tpcds_q99", _latency_sql(1997, "o.o_orderstatus", "cc_name"))
+def tpcds_q99(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q99 shape (tpcds/q99.sql: q62's catalog twin — same latency
+    bucket matrix keyed by call center instead of web site, different
+    year slice)."""
+    return _latency_buckets(spark, sf_dir, 1997, F.col("o_orderstatus"), "cc_name")
+
+
+# --- q32: excess discount vs 1.3x the item's windowed average --------------
+
+@_q(
+    "tpcds_q32",
+    """
+SELECT CAST(sum(disc_cents) AS BIGINT) AS excess_discount_cents
+FROM (
+  SELECT l.l_partkey, round(l.l_extendedprice * l.l_discount * 100) AS disc_cents,
+         sum(round(l.l_extendedprice * l.l_discount * 100)) OVER (PARTITION BY l.l_partkey) AS item_sum,
+         count(*) OVER (PARTITION BY l.l_partkey) AS item_cnt
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE o.o_orderdate BETWEEN '1996-01-27' AND '1996-04-26'
+) t
+JOIN part p ON t.l_partkey = p.p_partkey
+WHERE p.p_size = 28 AND disc_cents * 10 * item_cnt > 13 * item_sum
+""",
+)
+def tpcds_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q32 shape (tpcds/q32.sql: catalog lines whose discount
+    exceeds 1.3x the same item's 90-day average — q92's catalog twin with
+    a manufacturer gate OUTSIDE the correlated average, so the window
+    must be computed over ALL items in the period before the part filter
+    applies). Decorrelated as a window over the date-sliced fact; the
+    1.3x test is cross-multiplied exact integers. Scale: one window
+    shuffle on l_partkey; part broadcasts."""
+    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    base = li.join(
+        orders.filter(F.col("o_orderdate").between("1996-01-27", "1996-04-26")),
+        F.col("l_orderkey") == F.col("o_orderkey"),
+    ).select(
+        "l_partkey",
+        F.round(F.col("l_extendedprice") * F.col("l_discount") * 100).alias("disc_cents"),
+    )
+    w = W.partitionBy("l_partkey")
+    t = base.withColumn("item_sum", F.sum("disc_cents").over(w)).withColumn(
+        "item_cnt", F.count("*").over(w)
+    )
+    return (
+        t.join(part.filter(F.col("p_size") == 28), F.col("l_partkey") == F.col("p_partkey"))
+        .filter(F.col("disc_cents") * 10 * F.col("item_cnt") > 13 * F.col("item_sum"))
+        .agg(F.sum("disc_cents").cast("bigint").alias("excess_discount_cents"))
+    )
+
+
+# --- q30 / q81: customer returns above 1.2x their state's average ----------
+
+def _ctr(spark, sf_dir, year, amount, amount_sql):
+    """customer_total_return CTE: returns by (customer, state), the state
+    coming from the returning customer's address (nation analog)."""
+    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
+    return (
+        li.filter(F.col("l_returnflag") == "R")
+        .join(orders.filter(F.year("o_orderdate") == year),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .groupBy(F.col("c_custkey").alias("ctr_customer_sk"),
+                 F.col("c_nationkey").alias("ctr_state"))
+        .agg(_csum(amount).alias("ctr_total_return"))
+    )
+
+
+def _ctr_sql(year, amount_sql):
+    return f"""
+  SELECT c.c_custkey AS ctr_customer_sk, c.c_nationkey AS ctr_state,
+         {_csum_sql(amount_sql)} AS ctr_total_return
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  WHERE l.l_returnflag = 'R' AND year(o.o_orderdate) = {year}
+  GROUP BY 1, 2
+"""
+
+
+def _ctr_hot(ctr):
+    """ctr rows above 1.2x their state's average — the correlated scalar
+    subquery decorrelated as a window (exact integer cross-multiply:
+    10·ret·cnt > 12·state_sum)."""
+    w = W.partitionBy("ctr_state")
+    return (
+        ctr.withColumn("state_sum", F.sum("ctr_total_return").over(w))
+        .withColumn("state_cnt", F.count("*").over(w))
+        .filter(F.col("ctr_total_return") * 10 * F.col("state_cnt")
+                > 12 * F.col("state_sum"))
+    )
+
+
+_CTR_HOT_SQL = """
+  SELECT ctr_customer_sk, ctr_state, ctr_total_return
+  FROM (
+    SELECT ctr_customer_sk, ctr_state, ctr_total_return,
+           sum(ctr_total_return) OVER (PARTITION BY ctr_state) AS state_sum,
+           count(*) OVER (PARTITION BY ctr_state) AS state_cnt
+    FROM ctr
+  ) WHERE ctr_total_return * 10 * state_cnt > 12 * state_sum
+"""
+
+
+@_q(
+    "tpcds_q30",
+    f"""
+WITH ctr AS ({_ctr_sql(1996, "l.l_extendedprice")}),
+hot AS ({_CTR_HOT_SQL})
+SELECT c.c_name, c.c_mktsegment, c.c_acctbal,
+       CAST(hot.ctr_total_return AS BIGINT) AS ctr_total_return
+FROM hot
+JOIN customer c ON hot.ctr_customer_sk = c.c_custkey
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+WHERE n.n_name = 'NATION_5'
+ORDER BY c.c_name ASC, ctr_total_return ASC
+LIMIT 100
+""",
+)
+def tpcds_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q30 shape (tpcds/q30.sql: web-channel customer_total_return
+    CTE keyed by the returning address state, customers above 1.2x their
+    state's average return, re-joined to customer + current address
+    filtered to one state). State analog: nation; the correlated AVG
+    decorrelates to a state-partitioned window; the 1.2x gate is exact
+    integer cross-multiplication. Scale: one grouping + one window
+    shuffle on the CTE; customer/nation broadcast into the outer join."""
+    ctr = _ctr(spark, sf_dir, 1996, F.col("l_extendedprice"), "l.l_extendedprice")
+    hot = _ctr_hot(ctr)
+    cust, nation = _t(spark, sf_dir, "customer", "nation")
+    return (
+        hot.join(cust, F.col("ctr_customer_sk") == F.col("c_custkey"))
+        .join(nation.filter(F.col("n_name") == "NATION_5"),
+              F.col("c_nationkey") == F.col("n_nationkey"))
+        .select("c_name", "c_mktsegment", "c_acctbal",
+                F.col("ctr_total_return").cast("bigint").alias("ctr_total_return"))
+        .orderBy(F.asc("c_name"), F.asc("ctr_total_return"))
+        .limit(100)
+    )
+
+
+@_q(
+    "tpcds_q81",
+    f"""
+WITH ctr AS ({_ctr_sql(1997, "l.l_extendedprice * (1 + l.l_tax)")}),
+hot AS ({_CTR_HOT_SQL})
+SELECT c.c_name, n.n_name AS ca_state, c.c_acctbal,
+       CAST(hot.ctr_total_return AS BIGINT) AS ctr_total_return
+FROM hot
+JOIN customer c ON hot.ctr_customer_sk = c.c_custkey
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+WHERE n.n_name = 'NATION_7'
+ORDER BY c.c_name ASC, ctr_total_return ASC
+LIMIT 100
+""",
+)
+def tpcds_q81(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q81 shape (tpcds/q81.sql: q30's catalog twin — the returned
+    amount includes tax (cr_return_amt_inc_tax), different year and
+    state, address columns in the output)."""
+    ctr = _ctr(spark, sf_dir, 1997,
+               F.col("l_extendedprice") * (1 + F.col("l_tax")),
+               "l.l_extendedprice * (1 + l.l_tax)")
+    hot = _ctr_hot(ctr)
+    cust, nation = _t(spark, sf_dir, "customer", "nation")
+    return (
+        hot.join(cust, F.col("ctr_customer_sk") == F.col("c_custkey"))
+        .join(nation.filter(F.col("n_name") == "NATION_7"),
+              F.col("c_nationkey") == F.col("n_nationkey"))
+        .select("c_name", F.col("n_name").alias("ca_state"), "c_acctbal",
+                F.col("ctr_total_return").cast("bigint").alias("ctr_total_return"))
+        .orderBy(F.asc("c_name"), F.asc("ctr_total_return"))
+        .limit(100)
+    )
+
+
+# --- q25 / q29: store sale -> store return -> catalog repurchase chain -----
+
+def _three_fact(spark, sf_dir, year, moy, agg1, agg2, agg3, d3_cond_col):
+    """Three slices of the fact joined on (customer, item): a sale in one
+    month, its return in the following months, and a repurchase later."""
+    li, orders, part, supp = _t(spark, sf_dir, "lineitem", "orders", "part", "supplier")
+    s = (
+        li.alias("l1")
+        .join(orders.alias("o1"),
+              F.col("l1.l_orderkey") == F.col("o1.o_orderkey"))
+        .filter((F.year("o1.o_orderdate") == year) & (F.month("o1.o_orderdate") == moy)
+                & (F.col("l1.l_returnflag") != "R"))
+    )
+    r = (
+        li.alias("l2")
+        .join(orders.alias("o2"),
+              F.col("l2.l_orderkey") == F.col("o2.o_orderkey"))
+        .filter((F.year("o2.o_orderdate") == year)
+                & F.month("o2.o_orderdate").between(moy, moy + 3)
+                & (F.col("l2.l_returnflag") == "R"))
+    )
+    c = (
+        li.alias("l3")
+        .join(orders.alias("o3"),
+              F.col("l3.l_orderkey") == F.col("o3.o_orderkey"))
+        .filter(d3_cond_col)
+    )
+    j = (
+        s.join(r, F.col("l2.l_partkey") == F.col("l1.l_partkey"))
+        .join(c, F.col("l3.l_partkey") == F.col("l2.l_partkey"))
+        .join(part, F.col("l1.l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l1.l_suppkey") == F.col("s_suppkey"))
+    )
+    return (
+        j.groupBy(F.col("p_name").alias("i_item_desc"), F.col("s_name").alias("s_store_name"))
+        .agg(agg1, agg2, agg3)
+        .orderBy(F.asc("i_item_desc"), F.asc("s_store_name"))
+        .limit(100)
+    )
+
+
+def _three_fact_sql(year, moy, sel, d3_cond_sql):
+    return f"""
+SELECT p.p_name AS i_item_desc, s.s_name AS s_store_name, {sel}
+FROM lineitem l1
+JOIN orders o1 ON l1.l_orderkey = o1.o_orderkey
+JOIN lineitem l2 ON l2.l_partkey = l1.l_partkey
+JOIN orders o2 ON l2.l_orderkey = o2.o_orderkey
+JOIN lineitem l3 ON l3.l_partkey = l2.l_partkey
+JOIN orders o3 ON l3.l_orderkey = o3.o_orderkey
+JOIN part p ON l1.l_partkey = p.p_partkey
+JOIN supplier s ON l1.l_suppkey = s.s_suppkey
+WHERE year(o1.o_orderdate) = {year} AND month(o1.o_orderdate) = {moy}
+  AND l1.l_returnflag <> 'R'
+  AND year(o2.o_orderdate) = {year}
+  AND month(o2.o_orderdate) BETWEEN {moy} AND {moy + 3}
+  AND l2.l_returnflag = 'R'
+  AND {d3_cond_sql}
+GROUP BY 1, 2
+ORDER BY i_item_desc ASC, s_store_name ASC
+LIMIT 100
+"""
+
+
+@_q(
+    "tpcds_q25",
+    _three_fact_sql(
+        1996, 4,
+        f"{_msum_sql('l1.l_extendedprice * (1 - l1.l_discount)')} AS store_sales_profit, "
+        f"{_msum_sql('l2.l_extendedprice')} AS store_returns_loss, "
+        f"{_msum_sql('l3.l_extendedprice * (1 - l3.l_discount)')} AS catalog_sales_profit",
+        "year(o3.o_orderdate) = 1996 AND month(o3.o_orderdate) BETWEEN 4 AND 7",
+    ),
+)
+def tpcds_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q25 shape (tpcds/q25.sql: store sale in April, its return
+    within the following months, and the same customer's catalog
+    repurchase of the same item — a three-fact chain joined on
+    (customer, item) with three date roles, profit/loss sums per
+    (item, store)). Scale: the fact self-joins are equi-joins on
+    (custkey, partkey); month filters prune each slice before the join;
+    part/supplier broadcast."""
+    m1 = _msum(F.col("l1.l_extendedprice") * (1 - F.col("l1.l_discount"))).alias("store_sales_profit")
+    m2 = _msum(F.col("l2.l_extendedprice")).alias("store_returns_loss")
+    m3 = _msum(F.col("l3.l_extendedprice") * (1 - F.col("l3.l_discount"))).alias("catalog_sales_profit")
+    d3 = (F.year("o3.o_orderdate") == 1996) & F.month("o3.o_orderdate").between(4, 7)
+    return _three_fact(spark, sf_dir, 1996, 4, m1, m2, m3, d3)
+
+
+@_q(
+    "tpcds_q29",
+    _three_fact_sql(
+        1996, 9,
+        "CAST(sum(l1.l_quantity) AS BIGINT) AS store_sales_quantity, "
+        "CAST(sum(l2.l_quantity) AS BIGINT) AS store_returns_quantity, "
+        "CAST(sum(l3.l_quantity) AS BIGINT) AS catalog_sales_quantity",
+        "year(o3.o_orderdate) IN (1996, 1997, 1998)",
+    ),
+)
+def tpcds_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q29 shape (tpcds/q29.sql: q25's quantity twin — same
+    three-fact (customer, item) chain, quantity sums, and a three-year
+    window on the repurchase slice instead of a month band)."""
+    m1 = F.sum("l1.l_quantity").cast("bigint").alias("store_sales_quantity")
+    m2 = F.sum("l2.l_quantity").cast("bigint").alias("store_returns_quantity")
+    m3 = F.sum("l3.l_quantity").cast("bigint").alias("catalog_sales_quantity")
+    d3 = F.year("o3.o_orderdate").isin(1996, 1997, 1998)
+    return _three_fact(spark, sf_dir, 1996, 9, m1, m2, m3, d3)
+
+
+# --- q46 / q68: per-trip city-mismatch report ------------------------------
+
+def _trip_mismatch(spark, sf_dir, inner_filter, inner_filter_sql, aggs, aggs_sql,
+                   out_cols, order_cols, store_nations):
+    """dn = per-(trip, customer, bought_city) sums under a demographic OR
+    filter; outer join to the customer's CURRENT city, keep mismatches."""
+    li, orders, supp, nation, cust = _t(
+        spark, sf_dir, "lineitem", "orders", "supplier", "nation", "customer")
+    n1 = nation.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("bought_city"))
+    n2 = nation.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("ca_city"))
+    dn = (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(supp.filter(F.col("s_nationkey").isin(*store_nations)),
+              F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .filter(inner_filter)
+        .groupBy(F.col("o_orderkey").alias("ss_ticket_number"),
+                 F.col("o_custkey").alias("ss_customer_sk"),
+                 F.col("bought_city"))
+        .agg(*aggs)
+    )
+    out = (
+        dn.join(cust, F.col("ss_customer_sk") == F.col("c_custkey"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
+        .filter(F.col("ca_city") != F.col("bought_city"))
+        .select(*out_cols)
+        .orderBy(*order_cols)
+        .limit(100)
+    )
+    return out
+
+
+def _trip_mismatch_sql(inner_filter_sql, aggs_sql, out_sql, order_sql, store_nations):
+    nat = ", ".join(str(n) for n in store_nations)
+    return f"""
+WITH dn AS (
+  SELECT o.o_orderkey AS ss_ticket_number, o.o_custkey AS ss_customer_sk,
+         n1.n_name AS bought_city, {aggs_sql}
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
+  WHERE s.s_nationkey IN ({nat}) AND {inner_filter_sql}
+  GROUP BY 1, 2, 3
+)
+SELECT {out_sql}
+FROM dn
+JOIN customer c ON dn.ss_customer_sk = c.c_custkey
+JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
+WHERE n2.n_name <> dn.bought_city
+ORDER BY {order_sql}
+LIMIT 100
+"""
+
+
+@_q(
+    "tpcds_q46",
+    _trip_mismatch_sql(
+        "(l.l_quantity = 4 OR l.l_linenumber = 3) AND year(o.o_orderdate) IN (1996, 1997, 1998)"
+        " AND (datediff('day', DATE '1970-01-01', o.o_orderdate) % 7) IN (2, 3)",
+        f"{_csum_sql('l.l_extendedprice * l.l_discount')} AS amt, "
+        f"{_msum_sql('l.l_extendedprice * (1 - l.l_discount)')} AS profit",
+        "c.c_name, n2.n_name AS ca_city, dn.bought_city, dn.ss_ticket_number, "
+        "CAST(dn.amt AS BIGINT) AS amt, dn.profit",
+        "c.c_name ASC, ca_city ASC, bought_city ASC, ss_ticket_number ASC",
+        (1, 2, 3, 4, 5),
+    ),
+)
+def tpcds_q46(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q46 shape (tpcds/q46.sql: weekend store trips in a few
+    cities under an OR'd household-demographic gate, summed per trip,
+    then joined to the customer's current address keeping trips bought in
+    a DIFFERENT city). City analog: supplier/customer nation; weekend =
+    epoch-day mod 7 (identical formula both engines, no dow-convention
+    skew); demographic OR analog on (quantity, linenumber). Scale: one
+    grouping per trip, dims broadcast, mismatch filter is a residual
+    above a broadcast join."""
+    weekend = (F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date")) % 7).isin(2, 3)
+    inner = (
+        ((F.col("l_quantity") == 4) | (F.col("l_linenumber") == 3))
+        & F.year("o_orderdate").isin(1996, 1997, 1998) & weekend
+    )
+    aggs = [
+        _csum(F.col("l_extendedprice") * F.col("l_discount")).cast("bigint").alias("amt"),
+        _msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("profit"),
+    ]
+    out_cols = ["c_name", "ca_city", "bought_city", "ss_ticket_number", "amt", "profit"]
+    order_cols = [F.asc("c_name"), F.asc("ca_city"), F.asc("bought_city"),
+                  F.asc("ss_ticket_number")]
+    return _trip_mismatch(spark, sf_dir, inner, None, aggs, None, out_cols,
+                          order_cols, (1, 2, 3, 4, 5))
+
+
+@_q(
+    "tpcds_q68",
+    _trip_mismatch_sql(
+        "(l.l_quantity = 4 OR l.l_linenumber = 3) AND year(o.o_orderdate) IN (1996, 1997, 1998)"
+        " AND day(o.o_orderdate) BETWEEN 1 AND 2",
+        f"{_msum_sql('l.l_extendedprice')} AS extended_price, "
+        f"{_msum_sql('l.l_extendedprice * (1 + l.l_tax)')} AS list_price, "
+        f"{_msum_sql('l.l_extendedprice * l.l_tax')} AS extended_tax",
+        "c.c_name, n2.n_name AS ca_city, dn.bought_city, dn.ss_ticket_number, "
+        "dn.extended_price, dn.extended_tax, dn.list_price",
+        "c.c_name ASC, ss_ticket_number ASC, ca_city ASC, bought_city ASC",
+        (6, 7),
+    ),
+)
+def tpcds_q68(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q68 shape (tpcds/q68.sql: q46's month-start twin — trips on
+    the first two days of the month in two cities, price/tax/list sums,
+    same current-vs-bought city mismatch)."""
+    inner = (
+        ((F.col("l_quantity") == 4) | (F.col("l_linenumber") == 3))
+        & F.year("o_orderdate").isin(1996, 1997, 1998)
+        & F.dayofmonth("o_orderdate").between(1, 2)
+    )
+    aggs = [
+        _msum(F.col("l_extendedprice")).alias("extended_price"),
+        _msum(F.col("l_extendedprice") * (1 + F.col("l_tax"))).alias("list_price"),
+        _msum(F.col("l_extendedprice") * F.col("l_tax")).alias("extended_tax"),
+    ]
+    out_cols = ["c_name", "ca_city", "bought_city", "ss_ticket_number",
+                "extended_price", "extended_tax", "list_price"]
+    order_cols = [F.asc("c_name"), F.asc("ss_ticket_number"), F.asc("ca_city"),
+                  F.asc("bought_city")]
+    return _trip_mismatch(spark, sf_dir, inner, None, aggs, None, out_cols,
+                          order_cols, (6, 7))
+
+
+# --- q57: monthly deviation with lag/lead neighbors, per call center -------
+
+@_q(
+    "tpcds_q57",
+    f"""
+WITH v1 AS (
+  SELECT p.p_type AS i_category, p.p_brand AS i_brand, n.n_name AS cc_name,
+         year(o.o_orderdate) AS d_year, month(o.o_orderdate) AS d_moy,
+         {_csum_sql("l.l_extendedprice")} AS sum_sales,
+         CAST(sum({_csum_sql("l.l_extendedprice")})
+              OVER (PARTITION BY p.p_type, p.p_brand, n.n_name, year(o.o_orderdate)) AS BIGINT) AS year_sum,
+         count(*) OVER (PARTITION BY p.p_type, p.p_brand, n.n_name, year(o.o_orderdate)) AS year_cnt,
+         lag(CAST({_csum_sql("l.l_extendedprice")} AS BIGINT))
+           OVER (PARTITION BY p.p_type, p.p_brand, n.n_name
+                 ORDER BY year(o.o_orderdate), month(o.o_orderdate)) AS psum,
+         lead(CAST({_csum_sql("l.l_extendedprice")} AS BIGINT))
+           OVER (PARTITION BY p.p_type, p.p_brand, n.n_name
+                 ORDER BY year(o.o_orderdate), month(o.o_orderdate)) AS nsum
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN part p ON l.l_partkey = p.p_partkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN nation n ON s.s_nationkey = n.n_nationkey
+  WHERE year(o.o_orderdate) = 1996
+     OR (year(o.o_orderdate) = 1995 AND month(o.o_orderdate) = 12)
+     OR (year(o.o_orderdate) = 1997 AND month(o.o_orderdate) = 1)
+  GROUP BY 1, 2, 3, 4, 5
+)
+SELECT i_category, i_brand, cc_name, d_year, d_moy, sum_sales,
+       CAST(year_sum AS DOUBLE) / year_cnt AS avg_monthly_sales, psum, nsum
+FROM v1
+WHERE d_year = 1996 AND year_sum > 0
+  AND 10 * abs(sum_sales * year_cnt - year_sum) > year_sum
+ORDER BY sum_sales * year_cnt - year_sum ASC, cc_name ASC, i_category ASC,
+         i_brand ASC, d_moy ASC
+LIMIT 100
+""",
+)
+def tpcds_q57(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q57 shape (tpcds/q57.sql: catalog months per (category,
+    brand, call center) deviating >10% from the year average, with the
+    neighbor months via rank self-joins — expressed as lag/lead over the
+    same ordering, the equivalent single-pass plan; the extra Dec/Jan
+    boundary months exist only to feed the lag/lead edges, exactly as the
+    reference's OR'd date filter does). Call-center analog: supplier
+    nation. Deviation and ordering keys are exact integers. Scale: one
+    grouping shuffle; all three windows share one (cat, brand, cc)
+    partitioning."""
+    li, orders, part, supp, nation = _t(
+        spark, sf_dir, "lineitem", "orders", "part", "supplier", "nation")
+    datef = (
+        (F.year("o_orderdate") == 1996)
+        | ((F.year("o_orderdate") == 1995) & (F.month("o_orderdate") == 12))
+        | ((F.year("o_orderdate") == 1997) & (F.month("o_orderdate") == 1))
+    )
+    g = (
+        li.join(orders.filter(datef), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
+        .groupBy(
+            F.col("p_type").alias("i_category"), F.col("p_brand").alias("i_brand"),
+            F.col("n_name").alias("cc_name"),
+            F.year("o_orderdate").alias("d_year"), F.month("o_orderdate").alias("d_moy"),
+        )
+        .agg(_csum(F.col("l_extendedprice")).alias("sum_sales"))
+    )
+    wy = W.partitionBy("i_category", "i_brand", "cc_name", "d_year")
+    ws = W.partitionBy("i_category", "i_brand", "cc_name").orderBy("d_year", "d_moy")
+    v1 = (
+        g.withColumn("year_sum", F.sum("sum_sales").over(wy).cast("bigint"))
+        .withColumn("year_cnt", F.count("*").over(wy))
+        .withColumn("psum", F.lag("sum_sales").over(ws).cast("bigint"))
+        .withColumn("nsum", F.lead("sum_sales").over(ws).cast("bigint"))
+    )
+    return (
+        v1.filter(
+            (F.col("d_year") == 1996) & (F.col("year_sum") > 0)
+            & (10 * F.abs(F.col("sum_sales") * F.col("year_cnt") - F.col("year_sum"))
+               > F.col("year_sum"))
+        )
+        .select(
+            "i_category", "i_brand", "cc_name", "d_year", "d_moy", "sum_sales",
+            (F.col("year_sum").cast("double") / F.col("year_cnt")).alias("avg_monthly_sales"),
+            "psum", "nsum",
+        )
+        .orderBy(
+            F.asc(F.col("sum_sales") * F.col("year_cnt") - F.col("year_sum")),
+            F.asc("cc_name"), F.asc("i_category"), F.asc("i_brand"), F.asc("d_moy"),
+        )
+        .limit(100)
+    )
+
+
+# --- q74: two-channel year-over-year growth (q11's lean twin) --------------
+
+@_q(
+    "tpcds_q74",
+    f"""
+WITH year_total AS (
+  SELECT c.c_custkey AS customer_id, c.c_name AS customer_name,
+         year(o.o_orderdate) AS dyear,
+         {_csum_sql("l.l_extendedprice")} AS year_total, 's' AS sale_type
+  FROM customer c
+  JOIN orders o ON o.o_custkey = c.c_custkey
+  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+  WHERE year(o.o_orderdate) IN (1996, 1997)
+  GROUP BY 1, 2, 3
+  UNION ALL
+  SELECT c.c_custkey AS customer_id, c.c_name AS customer_name,
+         year(o.o_orderdate) AS dyear,
+         {_csum_sql("o.o_totalprice")} AS year_total, 'w' AS sale_type
+  FROM customer c
+  JOIN orders o ON o.o_custkey = c.c_custkey
+  WHERE year(o.o_orderdate) IN (1996, 1997)
+  GROUP BY 1, 2, 3
+)
+SELECT s2.customer_id, s2.customer_name
+FROM year_total s1
+JOIN year_total s2 ON s2.customer_id = s1.customer_id
+JOIN year_total w1 ON w1.customer_id = s1.customer_id
+JOIN year_total w2 ON w2.customer_id = s1.customer_id
+WHERE s1.sale_type = 's' AND s2.sale_type = 's'
+  AND w1.sale_type = 'w' AND w2.sale_type = 'w'
+  AND s1.dyear = 1996 AND s2.dyear = 1997
+  AND w1.dyear = 1996 AND w2.dyear = 1997
+  AND s1.year_total > 0 AND w1.year_total > 0
+  AND CAST(w2.year_total AS DOUBLE) / w1.year_total
+      > CAST(s2.year_total AS DOUBLE) / s1.year_total
+ORDER BY s2.customer_id ASC
+LIMIT 100
+""",
+)
+def tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q74 shape (tpcds/q74.sql: the two-year, two-channel lean
+    variant of q11 — year_total over net-paid (undiscounted price here,
+    distinguishing it from q11's revenue), 4-way self-join comparing
+    web vs store growth ratios). Ratios divide exact cents → identical
+    doubles. Scale: same materialization story as q11 (the CTE feeds four
+    consumers; cte_materialization_enabled persists it)."""
+    customer, orders, lineitem = _t(spark, sf_dir, "customer", "orders", "lineitem")
+    o96 = orders.filter(F.year("o_orderdate").isin(1996, 1997))
+    store = (
+        customer.join(o96, F.col("o_custkey") == F.col("c_custkey"))
+        .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy(F.col("c_custkey").alias("customer_id"),
+                 F.col("c_name").alias("customer_name"),
+                 F.year("o_orderdate").alias("dyear"))
+        .agg(_csum(F.col("l_extendedprice")).alias("year_total"))
+        .withColumn("sale_type", F.lit("s"))
+    )
+    web = (
+        customer.join(o96, F.col("o_custkey") == F.col("c_custkey"))
+        .groupBy(F.col("c_custkey").alias("customer_id"),
+                 F.col("c_name").alias("customer_name"),
+                 F.year("o_orderdate").alias("dyear"))
+        .agg(_csum(F.col("o_totalprice")).alias("year_total"))
+        .withColumn("sale_type", F.lit("w"))
+    )
+    from .tpcds import _materialize_cte
+
+    year_total = _materialize_cte(spark, store.unionByName(web))
+
+    def leg(alias, st, yr):
+        return (
+            year_total.filter((F.col("sale_type") == st) & (F.col("dyear") == yr))
+            .select("customer_id", "customer_name", "year_total")
+            .alias(alias)
+        )
+
+    s1, s2, w1, w2 = leg("s1", "s", 1996), leg("s2", "s", 1997), leg("w1", "w", 1996), leg("w2", "w", 1997)
+    joined = (
+        s1.join(s2, F.col("s2.customer_id") == F.col("s1.customer_id"))
+        .join(w1, F.col("w1.customer_id") == F.col("s1.customer_id"))
+        .join(w2, F.col("w2.customer_id") == F.col("s1.customer_id"))
+        .filter((F.col("s1.year_total") > 0) & (F.col("w1.year_total") > 0))
+        .filter(F.col("w2.year_total").cast("double") / F.col("w1.year_total")
+                > F.col("s2.year_total").cast("double") / F.col("s1.year_total"))
+    )
+    return (
+        joined.select(F.col("s2.customer_id").alias("customer_id"),
+                      F.col("s2.customer_name").alias("customer_name"))
+        .orderBy(F.asc("customer_id"))
+        .limit(100)
+    )
+
+
+# --- q77: per-channel sales/returns profit rollup --------------------------
+
+_Q77_WIN = ("1996-08-23", "1996-09-22")
+
+
+@_q(
+    "tpcds_q77",
+    f"""
+WITH ss AS (
+  SELECT l.l_suppkey AS sk, {_csum_sql("l.l_extendedprice")} AS sales,
+         {_csum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS profit
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE o.o_orderdate BETWEEN '{_Q77_WIN[0]}' AND '{_Q77_WIN[1]}' GROUP BY 1
+), sr AS (
+  SELECT l.l_suppkey AS sk, {_csum_sql("l.l_extendedprice")} AS returns_,
+         {_csum_sql("l.l_extendedprice * l.l_tax")} AS profit_loss
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'R'
+    AND o.o_orderdate BETWEEN '{_Q77_WIN[0]}' AND '{_Q77_WIN[1]}' GROUP BY 1
+), cs AS (
+  SELECT o.o_orderpriority AS ck, {_csum_sql("l.l_extendedprice")} AS sales,
+         {_csum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS profit
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE o.o_orderdate BETWEEN '{_Q77_WIN[0]}' AND '{_Q77_WIN[1]}' GROUP BY 1
+), cr AS (
+  SELECT o.o_orderpriority AS ck, {_csum_sql("l.l_extendedprice")} AS returns_,
+         {_csum_sql("l.l_extendedprice * l.l_tax")} AS profit_loss
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'R'
+    AND o.o_orderdate BETWEEN '{_Q77_WIN[0]}' AND '{_Q77_WIN[1]}' GROUP BY 1
+), ws AS (
+  SELECT l.l_linestatus AS wk, {_csum_sql("l.l_extendedprice")} AS sales,
+         {_csum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS profit
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE o.o_orderdate BETWEEN '{_Q77_WIN[0]}' AND '{_Q77_WIN[1]}' GROUP BY 1
+), wr AS (
+  SELECT l.l_linestatus AS wk, {_csum_sql("l.l_extendedprice")} AS returns_,
+         {_csum_sql("l.l_extendedprice * l.l_tax")} AS profit_loss
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'R'
+    AND o.o_orderdate BETWEEN '{_Q77_WIN[0]}' AND '{_Q77_WIN[1]}' GROUP BY 1
+), x AS (
+  SELECT 'store channel' AS channel, CAST(ss.sk AS VARCHAR) AS id, ss.sales,
+         coalesce(sr.returns_, 0) AS returns_,
+         ss.profit - coalesce(sr.profit_loss, 0) AS profit
+  FROM ss LEFT JOIN sr ON ss.sk = sr.sk
+  UNION ALL
+  SELECT 'catalog channel' AS channel, CAST(cs.ck AS VARCHAR) AS id, cs.sales,
+         cr.returns_ AS returns_, cs.profit - cr.profit_loss AS profit
+  FROM cs, cr
+  UNION ALL
+  SELECT 'web channel' AS channel, CAST(ws.wk AS VARCHAR) AS id, ws.sales,
+         coalesce(wr.returns_, 0) AS returns_,
+         ws.profit - coalesce(wr.profit_loss, 0) AS profit
+  FROM ws LEFT JOIN wr ON ws.wk = wr.wk
+)
+SELECT channel, id, round(sum(sales) / 100, 2) AS sales,
+       round(sum(returns_) / 100, 2) AS returns_,
+       round(sum(profit) / 100, 2) AS profit
+FROM x
+GROUP BY ROLLUP (channel, id)
+ORDER BY channel ASC NULLS FIRST, id ASC NULLS FIRST, sales ASC
+LIMIT 100
+""",
+)
+def tpcds_q77(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q77 shape (tpcds/q77.sql: six 30-day CTEs — sales and
+    returns per store / call center / web page — unioned with channel
+    labels under a ROLLUP(channel, id), including the reference's odd
+    catalog-channel CROSS join of its sales and returns CTEs). Channel
+    keys: supplier / order priority / line status. Scale: each CTE is one
+    pruned scan + tiny grouping; the rollup runs over dozens of rows."""
+    li, orders = _t(spark, sf_dir, "lineitem", "orders")
+    base = li.join(
+        orders.filter(F.col("o_orderdate").between(*_Q77_WIN)),
+        F.col("l_orderkey") == F.col("o_orderkey"),
+    )
+    rets = base.filter(F.col("l_returnflag") == "R")
+    # integer CENTS through the union — the rollup re-sums these values in
+    # arbitrary order, and only integer-valued doubles are order-independent
+    sales_aggs = [
+        _csum(F.col("l_extendedprice")).alias("sales"),
+        _csum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("profit"),
+    ]
+    ret_aggs = [
+        _csum(F.col("l_extendedprice")).alias("returns_"),
+        _csum(F.col("l_extendedprice") * F.col("l_tax")).alias("profit_loss"),
+    ]
+    ss = base.groupBy(F.col("l_suppkey").alias("sk")).agg(*sales_aggs)
+    sr = rets.groupBy(F.col("l_suppkey").alias("sk")).agg(*ret_aggs)
+    cs = base.groupBy(F.col("o_orderpriority").alias("ck")).agg(*sales_aggs)
+    cr = rets.groupBy(F.col("o_orderpriority").alias("ck")).agg(*ret_aggs)
+    ws = base.groupBy(F.col("l_linestatus").alias("wk")).agg(*sales_aggs)
+    wr = rets.groupBy(F.col("l_linestatus").alias("wk")).agg(*ret_aggs)
+    store = (
+        ss.alias("ss").join(sr.alias("sr"), F.col("ss.sk") == F.col("sr.sk"), "left")
+        .select(F.lit("store channel").alias("channel"),
+                F.col("ss.sk").cast("string").alias("id"),
+                F.col("sales"),
+                F.coalesce(F.col("returns_"), F.lit(0)).alias("returns_"),
+                (F.col("profit") - F.coalesce(F.col("profit_loss"), F.lit(0))).alias("profit"))
+    )
+    catalog = (
+        cs.alias("cs").crossJoin(cr.alias("cr"))
+        .select(F.lit("catalog channel").alias("channel"),
+                F.col("cs.ck").cast("string").alias("id"),
+                F.col("sales"), F.col("returns_"),
+                (F.col("profit") - F.col("profit_loss")).alias("profit"))
+    )
+    web = (
+        ws.alias("ws").join(wr.alias("wr"), F.col("ws.wk") == F.col("wr.wk"), "left")
+        .select(F.lit("web channel").alias("channel"),
+                F.col("ws.wk").cast("string").alias("id"),
+                F.col("sales"),
+                F.coalesce(F.col("returns_"), F.lit(0)).alias("returns_"),
+                (F.col("profit") - F.coalesce(F.col("profit_loss"), F.lit(0))).alias("profit"))
+    )
+    x = store.unionByName(catalog).unionByName(web)
+    return (
+        x.rollup("channel", "id")
+        .agg(F.round(F.sum("sales") / 100, 2).alias("sales"),
+             F.round(F.sum("returns_") / 100, 2).alias("returns_"),
+             F.round(F.sum("profit") / 100, 2).alias("profit"))
+        .orderBy(F.asc_nulls_first("channel"), F.asc_nulls_first("id"), F.asc("sales"))
+        .limit(100)
+    )
+
+
+# --- q80: row-level sale-return left joins per channel, rollup -------------
+
+@_q(
+    "tpcds_q80",
+    f"""
+WITH base AS (
+  SELECT l.*, o.o_orderpriority, o.o_orderdate FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN part p ON l.l_partkey = p.p_partkey
+  WHERE o.o_orderdate BETWEEN '{_Q77_WIN[0]}' AND '{_Q77_WIN[1]}'
+    AND p.p_retailprice > 905 AND o.o_orderpriority <> '1-URGENT'
+    AND l.l_returnflag <> 'R'
+), ret AS (
+  SELECT l_orderkey, l_partkey, l_extendedprice AS r_price,
+         l_extendedprice * l_discount AS r_loss
+  FROM lineitem WHERE l_returnflag = 'R'
+), joined AS (
+  SELECT b.*, r.r_price, r.r_loss
+  FROM base b LEFT JOIN ret r
+    ON b.l_orderkey = r.l_orderkey AND b.l_partkey = r.l_partkey
+), ssr AS (
+  SELECT CAST(l_suppkey AS VARCHAR) AS id, {_csum_sql("l_extendedprice")} AS sales,
+         CAST(sum(coalesce(round(r_price * 100), 0)) AS BIGINT) AS returns_,
+         CAST(sum(round(l_extendedprice * (1 - l_discount) * 100)
+              - coalesce(round(r_loss * 100), 0)) AS BIGINT) AS profit
+  FROM joined GROUP BY 1
+), csr AS (
+  SELECT o_orderpriority AS id, {_csum_sql("l_extendedprice")} AS sales,
+         CAST(sum(coalesce(round(r_price * 100), 0)) AS BIGINT) AS returns_,
+         CAST(sum(round(l_extendedprice * (1 - l_discount) * 100)
+              - coalesce(round(r_loss * 100), 0)) AS BIGINT) AS profit
+  FROM joined GROUP BY 1
+), wsr AS (
+  SELECT l_linestatus AS id, {_csum_sql("l_extendedprice")} AS sales,
+         CAST(sum(coalesce(round(r_price * 100), 0)) AS BIGINT) AS returns_,
+         CAST(sum(round(l_extendedprice * (1 - l_discount) * 100)
+              - coalesce(round(r_loss * 100), 0)) AS BIGINT) AS profit
+  FROM joined GROUP BY 1
+), x AS (
+  SELECT 'store channel' AS channel, concat('store', id) AS id, sales, returns_, profit FROM ssr
+  UNION ALL
+  SELECT 'catalog channel' AS channel, concat('catalog_page', id) AS id, sales, returns_, profit FROM csr
+  UNION ALL
+  SELECT 'web channel' AS channel, concat('web_site', id) AS id, sales, returns_, profit FROM wsr
+)
+SELECT channel, id, round(sum(sales) / 100, 2) AS sales,
+       round(sum(returns_) / 100, 2) AS returns_,
+       round(sum(profit) / 100, 2) AS profit
+FROM x
+GROUP BY ROLLUP (channel, id)
+ORDER BY channel ASC NULLS FIRST, id ASC NULLS FIRST, sales ASC
+LIMIT 100
+""",
+)
+def tpcds_q80(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q80 shape (tpcds/q80.sql: per-channel 30-day sales with each
+    sale row LEFT-joined to its return (same order + item) before
+    aggregation — returns and net profit ride the row-level join, unlike
+    q77's pre-aggregated CTEs — item-price and promotion gates, then the
+    same ROLLUP(channel, id) union). Promotion analog: order priority;
+    the row-level return join is (l_orderkey, l_partkey) equi. Scale: the
+    sale→return join is a co-partitioned equi-join on the fact keys; the
+    rollup input is small."""
+    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    base = (
+        li.filter(F.col("l_returnflag") != "R")
+        .join(orders.filter(F.col("o_orderdate").between(*_Q77_WIN)
+                            & (F.col("o_orderpriority") != "1-URGENT")),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(part.filter(F.col("p_retailprice") > 905),
+              F.col("l_partkey") == F.col("p_partkey"))
+    )
+    ret = (
+        li.filter(F.col("l_returnflag") == "R")
+        .select(F.col("l_orderkey").alias("r_orderkey"),
+                F.col("l_partkey").alias("r_partkey"),
+                F.col("l_extendedprice").alias("r_price"),
+                (F.col("l_extendedprice") * F.col("l_discount")).alias("r_loss"))
+    )
+    joined = base.join(
+        ret,
+        (F.col("l_orderkey") == F.col("r_orderkey"))
+        & (F.col("l_partkey") == F.col("r_partkey")),
+        "left",
+    )
+    # cents through the union (rollup re-sums; see q77 note)
+    sales = _csum(F.col("l_extendedprice")).alias("sales")
+    returns_ = F.sum(F.coalesce(F.round(F.col("r_price") * 100), F.lit(0))).cast("bigint").alias("returns_")
+    profit = F.sum(
+        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
+        - F.coalesce(F.round(F.col("r_loss") * 100), F.lit(0))
+    ).cast("bigint").alias("profit")
+
+    def channel(key_col, label, prefix):
+        return joined.groupBy(key_col.cast("string").alias("k")).agg(sales, returns_, profit).select(
+            F.lit(label).alias("channel"), F.concat(F.lit(prefix), F.col("k")).alias("id"),
+            "sales", "returns_", "profit",
+        )
+
+    x = (
+        channel(F.col("l_suppkey"), "store channel", "store")
+        .unionByName(channel(F.col("o_orderpriority"), "catalog channel", "catalog_page"))
+        .unionByName(channel(F.col("l_linestatus"), "web channel", "web_site"))
+    )
+    return (
+        x.rollup("channel", "id")
+        .agg(F.round(F.sum("sales") / 100, 2).alias("sales"),
+             F.round(F.sum("returns_") / 100, 2).alias("returns_"),
+             F.round(F.sum("profit") / 100, 2).alias("profit"))
+        .orderBy(F.asc_nulls_first("channel"), F.asc_nulls_first("id"), F.asc("sales"))
+        .limit(100)
+    )
+
+
+# --- q83: three return channels joined per item over shared weeks ----------
+
+@_q(
+    "tpcds_q83",
+    """
+WITH weeks AS (
+  SELECT DISTINCT weekofyear(d) AS wk FROM (
+    SELECT CAST('1996-06-30' AS DATE) AS d
+    UNION ALL SELECT CAST('1996-09-27' AS DATE)
+    UNION ALL SELECT CAST('1996-11-17' AS DATE))
+), sr_items AS (
+  SELECT l.l_partkey AS item_id, CAST(sum(l.l_quantity) AS BIGINT) AS sr_item_qty
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'R' AND l.l_linenumber % 3 = 1
+    AND weekofyear(o.o_orderdate) IN (SELECT wk FROM weeks)
+  GROUP BY 1
+), cr_items AS (
+  SELECT l.l_partkey AS item_id, CAST(sum(l.l_quantity) AS BIGINT) AS cr_item_qty
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'R' AND l.l_linenumber % 3 = 2
+    AND weekofyear(o.o_orderdate) IN (SELECT wk FROM weeks)
+  GROUP BY 1
+), wr_items AS (
+  SELECT l.l_partkey AS item_id, CAST(sum(l.l_quantity) AS BIGINT) AS wr_item_qty
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'R' AND l.l_linenumber % 3 = 0
+    AND weekofyear(o.o_orderdate) IN (SELECT wk FROM weeks)
+  GROUP BY 1
+)
+SELECT s.item_id, sr_item_qty,
+       round(CAST(sr_item_qty AS DOUBLE) / (sr_item_qty + cr_item_qty + wr_item_qty) / 3.0 * 100, 6) AS sr_dev,
+       cr_item_qty,
+       round(CAST(cr_item_qty AS DOUBLE) / (sr_item_qty + cr_item_qty + wr_item_qty) / 3.0 * 100, 6) AS cr_dev,
+       wr_item_qty,
+       round(CAST(wr_item_qty AS DOUBLE) / (sr_item_qty + cr_item_qty + wr_item_qty) / 3.0 * 100, 6) AS wr_dev,
+       CAST(sr_item_qty + cr_item_qty + wr_item_qty AS DOUBLE) / 3.0 AS average
+FROM sr_items s
+JOIN cr_items c ON s.item_id = c.item_id
+JOIN wr_items w ON s.item_id = w.item_id
+ORDER BY s.item_id ASC, sr_item_qty ASC
+LIMIT 100
+""",
+)
+def tpcds_q83(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q83 shape (tpcds/q83.sql: returned quantities per item in
+    three channels over the weeks containing three given dates — the
+    nested date_dim week subquery — inner-joined per item with each
+    channel's share of the three-channel total). Channel analog:
+    l_linenumber mod 3 slices of the R rows; week filter via weekofyear
+    (ISO in both engines). Shares divide exact integers. Scale: three
+    pruned scans + one 3-way equi-join on item."""
+    import datetime
+
+    li, orders = _t(spark, sf_dir, "lineitem", "orders")
+    weeks = sorted({datetime.date(1996, 6, 30).isocalendar()[1],
+                    datetime.date(1996, 9, 27).isocalendar()[1],
+                    datetime.date(1996, 11, 17).isocalendar()[1]})
+    r = (
+        li.filter(F.col("l_returnflag") == "R")
+        .join(orders.filter(F.weekofyear("o_orderdate").isin(weeks)),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+    )
+
+    def channel(mod, name):
+        return (
+            r.filter(F.col("l_linenumber") % 3 == mod)
+            .groupBy(F.col("l_partkey").alias(f"{name}_key"))
+            .agg(F.sum("l_quantity").cast("bigint").alias(f"{name}_item_qty"))
+        )
+
+    s, c, w = channel(1, "sr"), channel(2, "cr"), channel(0, "wr")
+    j = (
+        s.join(c, F.col("sr_key") == F.col("cr_key"))
+        .join(w, F.col("sr_key") == F.col("wr_key"))
+    )
+    total = F.col("sr_item_qty") + F.col("cr_item_qty") + F.col("wr_item_qty")
+    dev = lambda q: F.round(q.cast("double") / total / 3.0 * 100, 6)  # noqa: E731
+    return (
+        j.select(
+            F.col("sr_key").alias("item_id"),
+            "sr_item_qty", dev(F.col("sr_item_qty")).alias("sr_dev"),
+            "cr_item_qty", dev(F.col("cr_item_qty")).alias("cr_dev"),
+            "wr_item_qty", dev(F.col("wr_item_qty")).alias("wr_dev"),
+            (total.cast("double") / 3.0).alias("average"),
+        )
+        .orderBy(F.asc("item_id"), F.asc("sr_item_qty"))
+        .limit(100)
+    )
+
+
+# --- q72: fact-to-fact inventory join on (item, week) ----------------------
+
+@_q(
+    "tpcds_q72",
+    """
+SELECT p.p_name AS i_item_desc, s.s_name AS w_warehouse_name,
+       weekofyear(o1.o_orderdate) AS d_week_seq,
+       CAST(sum(CASE WHEN pr.l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS no_promo,
+       CAST(sum(CASE WHEN pr.l_orderkey IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS promo,
+       CAST(count(*) AS BIGINT) AS total_cnt
+FROM lineitem l1
+JOIN orders o1 ON l1.l_orderkey = o1.o_orderkey
+JOIN customer c ON o1.o_custkey = c.c_custkey
+JOIN lineitem l2 ON l2.l_partkey = l1.l_partkey
+JOIN orders o2 ON l2.l_orderkey = o2.o_orderkey
+JOIN part p ON l1.l_partkey = p.p_partkey
+JOIN supplier s ON l2.l_suppkey = s.s_suppkey
+LEFT JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+           WHERE l_returnflag = 'R') pr
+  ON pr.l_orderkey = l1.l_orderkey AND pr.l_partkey = l1.l_partkey
+WHERE year(o1.o_orderdate) = 1996
+  AND year(o2.o_orderdate) = 1996
+  AND weekofyear(o2.o_orderdate) = weekofyear(o1.o_orderdate)
+  AND l2.l_quantity < l1.l_quantity
+  AND l1.l_shipdate > o1.o_orderdate + INTERVAL 5 DAY
+  AND o1.o_orderpriority IN ('1-URGENT', '2-HIGH')
+  AND c.c_mktsegment IN ('BUILDING', 'MACHINERY')
+GROUP BY 1, 2, 3
+ORDER BY total_cnt DESC, i_item_desc ASC, w_warehouse_name ASC, d_week_seq ASC
+LIMIT 100
+""",
+)
+def tpcds_q72(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q72 shape (tpcds/q72.sql: the notorious catalog-sales ×
+    inventory fact-to-fact join — same item, same WEEK, on-hand quantity
+    below the ordered quantity — with demographic gates, a ship-after-5-
+    days date inequality across two date roles, and a LEFT join to
+    promotion counted into promo/no-promo buckets). Inventory analog: a
+    second lineitem slice keyed by (partkey, week); warehouse = that
+    slice's supplier; promotion = the order's R-flagged return line.
+    Scale: THE planner stress — the only safe plan is the equi-join on
+    (partkey, week-bucket) with the quantity inequality as residual;
+    dims broadcast; no date-range cross join ever materializes."""
+    li, orders, part, supp, cust = _t(
+        spark, sf_dir, "lineitem", "orders", "part", "supplier", "customer")
+    l1 = (
+        li.alias("l1")
+        .join(orders.alias("o1").filter((F.year("o1.o_orderdate") == 1996)
+                                        & F.col("o1.o_orderpriority").isin("1-URGENT", "2-HIGH")),
+              F.col("l1.l_orderkey") == F.col("o1.o_orderkey"))
+        .join(cust.filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY")),
+              F.col("o1.o_custkey") == F.col("c_custkey"))
+        .filter(F.col("l1.l_shipdate")
+                > F.date_add(F.col("o1.o_orderdate"), 5))
+    )
+    l2 = (
+        li.alias("l2")
+        .join(orders.alias("o2").filter(F.year("o2.o_orderdate") == 1996),
+              F.col("l2.l_orderkey") == F.col("o2.o_orderkey"))
+    )
+    pr = (
+        li.filter(F.col("l_returnflag") == "R")
+        .select(F.col("l_orderkey").alias("pr_orderkey"),
+                F.col("l_partkey").alias("pr_partkey"))
+        .distinct()
+    )
+    j = (
+        l1.join(
+            l2,
+            (F.col("l2.l_partkey") == F.col("l1.l_partkey"))
+            & (F.weekofyear("o2.o_orderdate") == F.weekofyear("o1.o_orderdate"))
+            & (F.col("l2.l_quantity") < F.col("l1.l_quantity")),
+        )
+        .join(part, F.col("l1.l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l2.l_suppkey") == F.col("s_suppkey"))
+        .join(pr, (F.col("pr_orderkey") == F.col("l1.l_orderkey"))
+              & (F.col("pr_partkey") == F.col("l1.l_partkey")), "left")
+    )
+    return (
+        j.groupBy(F.col("p_name").alias("i_item_desc"),
+                  F.col("s_name").alias("w_warehouse_name"),
+                  F.weekofyear("o1.o_orderdate").alias("d_week_seq"))
+        .agg(
+            F.sum(F.when(F.col("pr_orderkey").isNull(), 1).otherwise(0)).cast("bigint").alias("no_promo"),
+            F.sum(F.when(F.col("pr_orderkey").isNotNull(), 1).otherwise(0)).cast("bigint").alias("promo"),
+            F.count("*").cast("bigint").alias("total_cnt"),
+        )
+        .orderBy(F.desc("total_cnt"), F.asc("i_item_desc"),
+                 F.asc("w_warehouse_name"), F.asc("d_week_seq"))
+        .limit(100)
+    )
+
+
+# --- q64: two-year cross_sales CTE self-join -------------------------------
+
+@_q(
+    "tpcds_q64",
+    f"""
+WITH cs_ui AS (
+  SELECT l1.l_partkey AS cs_item_sk,
+         {_csum_sql("l1.l_extendedprice")} AS sale,
+         {_csum_sql("l2.l_extendedprice * l2.l_tax")} AS refund
+  FROM lineitem l1
+  JOIN lineitem l2 ON l1.l_orderkey = l2.l_orderkey
+   AND l1.l_partkey = l2.l_partkey AND l2.l_returnflag = 'R'
+  GROUP BY 1
+  HAVING {_csum_sql("l1.l_extendedprice")}
+         > 2 * {_csum_sql("l2.l_extendedprice * l2.l_tax")}
+), cross_sales AS (
+  SELECT p.p_name AS product_name, p.p_partkey AS item_sk,
+         s.s_name AS store_name, s.s_nationkey AS store_zip,
+         n1.n_name AS b_city, n2.n_name AS c_city,
+         year(o.o_orderdate) AS syear,
+         CAST(count(*) AS BIGINT) AS cnt,
+         {_csum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS s1,
+         {_csum_sql("l.l_extendedprice")} AS s2,
+         {_csum_sql("l.l_extendedprice * l.l_discount")} AS s3
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN cs_ui ON l.l_partkey = cs_ui.cs_item_sk
+  JOIN part p ON l.l_partkey = p.p_partkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
+  JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
+  WHERE p.p_retailprice BETWEEN 905 AND 915
+    AND p.p_brand IN ('Brand#11', 'Brand#12', 'Brand#13', 'Brand#21', 'Brand#22', 'Brand#23')
+    AND c.c_mktsegment <> 'BUILDING'
+  GROUP BY 1, 2, 3, 4, 5, 6, 7
+)
+SELECT cs1.product_name, cs1.store_name, cs1.store_zip, cs1.b_city, cs1.c_city,
+       cs1.syear AS syear1, cs1.cnt AS cnt1,
+       CAST(cs1.s1 AS BIGINT) AS s11, CAST(cs1.s2 AS BIGINT) AS s21,
+       CAST(cs1.s3 AS BIGINT) AS s31,
+       CAST(cs2.s1 AS BIGINT) AS s12, CAST(cs2.s2 AS BIGINT) AS s22,
+       CAST(cs2.s3 AS BIGINT) AS s32,
+       cs2.syear AS syear2, cs2.cnt AS cnt2
+FROM cross_sales cs1
+JOIN cross_sales cs2 ON cs1.item_sk = cs2.item_sk
+ AND cs1.store_name = cs2.store_name AND cs1.store_zip = cs2.store_zip
+WHERE cs1.syear = 1996 AND cs2.syear = 1997 AND cs2.cnt <= cs1.cnt
+ORDER BY cs1.product_name ASC, cs1.store_name ASC, cs2.cnt ASC,
+         cs1.b_city ASC, cs1.c_city ASC, s11 ASC, s12 ASC
+LIMIT 100
+""",
+)
+def tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q64 shape (tpcds/q64.sql: the widest query in the corpus —
+    a cs_ui CTE of items whose sales more than double their refunds
+    (HAVING over a sale-return join), feeding a cross_sales CTE that
+    joins the store fact through customer, two address roles, store,
+    item and the demographic mismatch gate, grouped per (item, store,
+    year); finally cross_sales SELF-JOINED across two years on (item,
+    store) with cnt2 <= cnt1). Address roles: supplier nation (bought) /
+    customer nation (current); demographic mismatch: mktsegment gate.
+    The cross_sales CTE feeds BOTH sides of the year self-join, so it is
+    pre-filtered to the two consumed years and PINNED (localCheckpoint,
+    r13 — VERDICT r12 #5): the heavy pipeline executes once, not once
+    per side. Scale: cs_ui is a co-partitioned fact self-join on
+    (order, item); the year self-join shuffles only the small pinned
+    grouped frame."""
+    cross_sales = _q64_cross_sales(spark, sf_dir)
+    # the year self-join consumes ONLY syear 1996/1997, so pre-filter the
+    # grouped frame to those two years and PIN it (localCheckpoint): the
+    # 7-join + aggregate pipeline executes exactly once instead of once
+    # per self-join side (the sim_knn_graph r12 lesson — Catalyst pushes
+    # each side's syear filter below the aggregate, making the subplans
+    # differ and defeating exchange reuse). The pinned frame is the tiny
+    # (item, store, year) grouped relation.
+    cross_sales = cross_sales.filter(
+        F.col("syear").isin(1996, 1997)
+    ).localCheckpoint(eager=False)
+    cs1 = cross_sales.filter(F.col("syear") == 1996).alias("cs1")
+    cs2 = cross_sales.filter(F.col("syear") == 1997).alias("cs2")
+    j = cs1.join(
+        cs2,
+        (F.col("cs1.item_sk") == F.col("cs2.item_sk"))
+        & (F.col("cs1.store_name") == F.col("cs2.store_name"))
+        & (F.col("cs1.store_zip") == F.col("cs2.store_zip"))
+        & (F.col("cs2.cnt") <= F.col("cs1.cnt")),
+    )
+    return (
+        j.select(
+            F.col("cs1.product_name").alias("product_name"),
+            F.col("cs1.store_name").alias("store_name"),
+            F.col("cs1.store_zip").alias("store_zip"),
+            F.col("cs1.b_city").alias("b_city"), F.col("cs1.c_city").alias("c_city"),
+            F.col("cs1.syear").alias("syear1"), F.col("cs1.cnt").alias("cnt1"),
+            F.col("cs1.s1").cast("bigint").alias("s11"),
+            F.col("cs1.s2").cast("bigint").alias("s21"),
+            F.col("cs1.s3").cast("bigint").alias("s31"),
+            F.col("cs2.s1").cast("bigint").alias("s12"),
+            F.col("cs2.s2").cast("bigint").alias("s22"),
+            F.col("cs2.s3").cast("bigint").alias("s32"),
+            F.col("cs2.syear").alias("syear2"), F.col("cs2.cnt").alias("cnt2"),
+        )
+        .orderBy(F.asc("product_name"), F.asc("store_name"), F.asc("cnt2"),
+                 F.asc("b_city"), F.asc("c_city"), F.asc("s11"), F.asc("s12"))
+        .limit(100)
+    )
+
+
+def _q64_cross_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q64's cross_sales CTE pre-checkpoint: the cs_ui sale>2*refund item
+    gate feeding the 7-join spine, grouped per (item, store, year).
+    Exposed so the plan gate can assert the dims broadcast on the frame
+    that actually executes (the pinned checkpoint hides it)."""
+    li, orders, part, supp, cust, nation = _t(
+        spark, sf_dir, "lineitem", "orders", "part", "supplier", "customer", "nation")
+    # r13 opt (guide §3.2 — reduce the big side BEFORE anything else):
+    # the part predicate (retailprice band + 6 brands) keeps ~2.6% of
+    # parts, but it sat 4th in the join order and Catalyst does not
+    # reorder joins without CBO stats — so the FULL fact table rode the
+    # orders/customer joins and the cs_ui self-join. A broadcast
+    # semi-join on the qualifying part keys prunes lineitem FIRST
+    # (~2.6% survives at every SF — the filter is on the part dimension,
+    # so selectivity is scale-free); pruning before cs_ui is equivalence-
+    # safe because cs_ui groups BY partkey (dropping other items' groups
+    # cannot change a kept item's sums, and the inner join drops those
+    # groups anyway). Measured 2.3 -> 1.7 s same-box at sf0.1; rows
+    # identical.
+    fpart = part.filter(
+        F.col("p_retailprice").between(905, 915)
+        & F.col("p_brand").isin("Brand#11", "Brand#12", "Brand#13",
+                                "Brand#21", "Brand#22", "Brand#23")
+    )
+    lif = li.join(
+        F.broadcast(fpart.select(F.col("p_partkey").alias("l_partkey"))),
+        "l_partkey",
+        "left_semi",
+    ).localCheckpoint(eager=False)
+    l2 = (
+        lif.filter(F.col("l_returnflag") == "R")
+        .select(F.col("l_orderkey").alias("r_orderkey"),
+                F.col("l_partkey").alias("r_partkey"),
+                F.col("l_extendedprice").alias("r_price"),
+                F.col("l_tax").alias("r_tax"))
+    )
+    cs_ui = (
+        lif.join(l2, (F.col("l_orderkey") == F.col("r_orderkey"))
+                 & (F.col("l_partkey") == F.col("r_partkey")))
+        .groupBy(F.col("l_partkey").alias("cs_item_sk"))
+        .agg(_csum(F.col("l_extendedprice")).alias("sale"),
+             _csum(F.col("r_price") * F.col("r_tax")).alias("refund"))
+        .filter(F.col("sale") > 2 * F.col("refund"))
+        .select("cs_item_sk")
+    )
+    n1 = nation.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("b_city"))
+    n2 = nation.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("c_city"))
+    base = (
+        lif.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust.filter(F.col("c_mktsegment") != "BUILDING"),
+              F.col("o_custkey") == F.col("c_custkey"))
+        .join(cs_ui, F.col("l_partkey") == F.col("cs_item_sk"))
+        .join(fpart, F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
+    )
+    return base.groupBy(
+        F.col("p_name").alias("product_name"), F.col("p_partkey").alias("item_sk"),
+        F.col("s_name").alias("store_name"), F.col("s_nationkey").alias("store_zip"),
+        F.col("b_city"), F.col("c_city"), F.year("o_orderdate").alias("syear"),
+    ).agg(
+        F.count("*").cast("bigint").alias("cnt"),
+        _csum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("s1"),
+        _csum(F.col("l_extendedprice")).alias("s2"),
+        _csum(F.col("l_extendedprice") * F.col("l_discount")).alias("s3"),
+    )
+
+
+# --- q16 / q94: multi-warehouse shipped, never-returned orders -------------
+
+def _ship_orders(spark, sf_dir, date_lo, date_hi, nations, prio):
+    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
+    l1 = (
+        li.filter(F.col("l_shipdate").between(date_lo, date_hi))
+        .join(orders.filter(F.col("o_orderpriority") == prio),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust.filter(F.col("c_nationkey").isin(*nations)),
+              F.col("o_custkey") == F.col("c_custkey"))
+    )
+    # EXISTS: another line of the order shipped from a DIFFERENT warehouse
+    l2 = li.select(F.col("l_orderkey").alias("e_orderkey"),
+                   F.col("l_suppkey").alias("e_suppkey"))
+    with_other = l1.join(
+        l2,
+        (F.col("e_orderkey") == F.col("l_orderkey"))
+        & (F.col("e_suppkey") != F.col("l_suppkey")),
+        "left_semi",
+    )
+    # NOT EXISTS: the order has no return line
+    returned = li.filter(F.col("l_returnflag") == "R").select(
+        F.col("l_orderkey").alias("r_orderkey")
+    )
+    kept = with_other.join(
+        returned, F.col("r_orderkey") == F.col("l_orderkey"), "left_anti"
+    )
+    return kept.agg(
+        F.countDistinct("l_orderkey").cast("bigint").alias("order_count"),
+        _msum(F.col("l_extendedprice") * F.col("l_discount")).alias("total_ship_cost"),
+        _msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_net_profit"),
+    )
+
+
+def _ship_orders_sql(date_lo, date_hi, nations, prio):
+    nat = ", ".join(str(n) for n in nations)
+    return f"""
+SELECT CAST(count(DISTINCT l1.l_orderkey) AS BIGINT) AS order_count,
+       {_msum_sql("l1.l_extendedprice * l1.l_discount")} AS total_ship_cost,
+       {_msum_sql("l1.l_extendedprice * (1 - l1.l_discount)")} AS total_net_profit
+FROM lineitem l1
+JOIN orders o ON l1.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+WHERE l1.l_shipdate BETWEEN '{date_lo}' AND '{date_hi}'
+  AND o.o_orderpriority = '{prio}'
+  AND c.c_nationkey IN ({nat})
+  AND EXISTS (SELECT 1 FROM lineitem l2
+              WHERE l2.l_orderkey = l1.l_orderkey
+                AND l2.l_suppkey <> l1.l_suppkey)
+  AND NOT EXISTS (SELECT 1 FROM lineitem r
+                  WHERE r.l_orderkey = l1.l_orderkey AND r.l_returnflag = 'R')
+"""
+
+
+@_q("tpcds_q16", _ship_orders_sql("1996-02-01", "1996-04-01", (1, 2, 3), "2-HIGH"))
+def tpcds_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q16 shape (tpcds/q16.sql: catalog orders shipped in a 60-day
+    window to one state from one county's call centers, that shipped from
+    MULTIPLE warehouses — a correlated EXISTS on the same fact — and were
+    NEVER returned — a NOT EXISTS anti-join — reported as distinct-order
+    count + cost sums). Warehouse analog: l_suppkey; the EXISTS becomes a
+    residual-conditioned semi-join on the order key, the NOT EXISTS a
+    broadcast anti-join. Scale: both sub-lookups co-partition with the
+    fact on l_orderkey — no row explosion."""
+    return _ship_orders(spark, sf_dir, "1996-02-01", "1996-04-01", (1, 2, 3), "2-HIGH")
+
+
+@_q("tpcds_q94", _ship_orders_sql("1997-02-01", "1997-04-01", (5, 7, 9), "5-LOW"))
+def tpcds_q94(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q94 shape (tpcds/q94.sql: q16's web twin — identical
+    multi-warehouse EXISTS / never-returned NOT EXISTS skeleton on the
+    web channel, different window/state/site gate)."""
+    return _ship_orders(spark, sf_dir, "1997-02-01", "1997-04-01", (5, 7, 9), "5-LOW")
+
+
+# --- q21: inventory before/after a pivot date ------------------------------
+
+@_q(
+    "tpcds_q21",
+    """
+SELECT * FROM (
+  SELECT s.s_name AS w_warehouse_name, p.p_partkey AS i_item_id,
+         CAST(sum(CASE WHEN l.l_shipdate < '1996-03-11' THEN l.l_quantity ELSE 0 END) AS BIGINT) AS inv_before,
+         CAST(sum(CASE WHEN l.l_shipdate >= '1996-03-11' THEN l.l_quantity ELSE 0 END) AS BIGINT) AS inv_after
+  FROM lineitem l
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN part p ON l.l_partkey = p.p_partkey
+  WHERE p.p_retailprice BETWEEN 905 AND 911
+    AND l.l_shipdate BETWEEN '1996-01-10' AND '1996-05-10'
+  GROUP BY 1, 2
+) x
+WHERE inv_before > 0
+  AND CAST(inv_after AS DOUBLE) / inv_before BETWEEN 1.0 / 2.0 AND 2.0 / 1.0
+ORDER BY w_warehouse_name ASC, i_item_id ASC
+LIMIT 100
+""",
+)
+def tpcds_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q21 shape (tpcds/q21.sql: per (warehouse, item) on-hand
+    quantity split into before/after a pivot date over a ±30-day window,
+    keeping items whose after/before ratio stays within a band — widened to [1/2, 2] for the synthetic data's sparser per-(warehouse, item) groups).
+    Inventory analog: lineitem quantities by ship date; warehouse =
+    supplier. The ratio divides exact integers → identical doubles.
+    Scale: one grouping; price band prunes part before the join."""
+    li, supp, part = _t(spark, sf_dir, "lineitem", "supplier", "part")
+    x = (
+        li.filter(F.col("l_shipdate").between("1996-01-10", "1996-05-10"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(part.filter(F.col("p_retailprice").between(905, 911)),
+              F.col("l_partkey") == F.col("p_partkey"))
+        .groupBy(F.col("s_name").alias("w_warehouse_name"),
+                 F.col("p_partkey").alias("i_item_id"))
+        .agg(
+            F.sum(F.when(F.col("l_shipdate") < "1996-03-11", F.col("l_quantity"))
+                  .otherwise(0)).cast("bigint").alias("inv_before"),
+            F.sum(F.when(F.col("l_shipdate") >= "1996-03-11", F.col("l_quantity"))
+                  .otherwise(0)).cast("bigint").alias("inv_after"),
+        )
+    )
+    ratio = F.col("inv_after").cast("double") / F.col("inv_before")
+    return (
+        x.filter((F.col("inv_before") > 0)
+                 & ratio.between(F.lit(1.0) / 2.0, F.lit(2.0) / 1.0))
+        .orderBy(F.asc("w_warehouse_name"), F.asc("i_item_id"))
+        .limit(100)
+    )
+
+
+# --- q37 / q82: in-stock items also selling in a channel -------------------
+
+def _instock(spark, sf_dir, date_lo, date_hi, sizes, chan_flag):
+    li, part = _t(spark, sf_dir, "lineitem", "part")
+    inv = li.filter(
+        F.col("l_shipdate").between(date_lo, date_hi)
+        & F.col("l_quantity").between(10, 40)
+    )
+    chan = li.filter(F.col("l_linestatus") == chan_flag).select(
+        F.col("l_partkey").alias("ch_partkey")
+    )
+    return (
+        inv.join(part.filter(F.col("p_retailprice").between(905, 915)
+                             & F.col("p_size").isin(*sizes)),
+                 F.col("l_partkey") == F.col("p_partkey"))
+        .join(chan, F.col("ch_partkey") == F.col("l_partkey"), "left_semi")
+        .groupBy(F.col("p_partkey").alias("i_item_id"),
+                 F.col("p_name").alias("i_item_desc"),
+                 F.col("p_retailprice").alias("i_current_price"))
+        .agg(F.count("*").alias("_cnt"))
+        .select("i_item_id", "i_item_desc", "i_current_price")
+        .orderBy(F.asc("i_item_id"))
+        .limit(100)
+    )
+
+
+def _instock_sql(date_lo, date_hi, sizes, chan_flag):
+    sz = ", ".join(str(s) for s in sizes)
+    return f"""
+SELECT p.p_partkey AS i_item_id, p.p_name AS i_item_desc,
+       p.p_retailprice AS i_current_price
+FROM lineitem l
+JOIN part p ON l.l_partkey = p.p_partkey
+WHERE l.l_shipdate BETWEEN '{date_lo}' AND '{date_hi}'
+  AND l.l_quantity BETWEEN 10 AND 40
+  AND p.p_retailprice BETWEEN 905 AND 915
+  AND p.p_size IN ({sz})
+  AND EXISTS (SELECT 1 FROM lineitem c
+              WHERE c.l_partkey = l.l_partkey AND c.l_linestatus = '{chan_flag}')
+GROUP BY 1, 2, 3
+ORDER BY i_item_id ASC
+LIMIT 100
+"""
+
+
+@_q("tpcds_q37", _instock_sql("1996-02-01", "1996-04-01", (7, 14, 21, 28), "O"))
+def tpcds_q37(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q37 shape (tpcds/q37.sql: items from four manufacturers in a
+    price band, held in inventory at 100-500 units during a 60-day
+    window, that ALSO sell in the catalog channel — the fact semi-join).
+    Inventory analog: lineitem quantity band by ship date; channel =
+    linestatus slice. Scale: part prunes first; the channel check is a
+    semi-join on partkey."""
+    return _instock(spark, sf_dir, "1996-02-01", "1996-04-01", (7, 14, 21, 28), "O")
+
+
+@_q("tpcds_q82", _instock_sql("1997-05-25", "1997-07-24", (5, 10, 15, 20), "F"))
+def tpcds_q82(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q82 shape (tpcds/q82.sql: q37's store twin — same in-stock
+    + also-selling skeleton against the store channel, different window
+    and manufacturer set)."""
+    return _instock(spark, sf_dir, "1997-05-25", "1997-07-24", (5, 10, 15, 20), "F")
+
+
+# --- q26: demographic-gated catalog item averages --------------------------
+
+@_q(
+    "tpcds_q26",
+    """
+SELECT p.p_partkey AS i_item_id,
+       round(avg(l.l_quantity), 6) AS agg1,
+       round(avg(round(l.l_extendedprice * (1 + l.l_tax) * 100)), 6) AS agg2,
+       round(avg(round(l.l_extendedprice * l.l_discount * 100)), 6) AS agg3,
+       round(avg(round(l.l_extendedprice * 100)), 6) AS agg4
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+JOIN part p ON l.l_partkey = p.p_partkey
+WHERE c.c_mktsegment = 'AUTOMOBILE' AND o.o_orderstatus = 'F'
+  AND (o.o_orderpriority = '3-MEDIUM' OR o.o_orderpriority = '4-NOT SPECIFIED')
+  AND year(o.o_orderdate) = 1997
+GROUP BY 1
+ORDER BY i_item_id ASC
+LIMIT 100
+""",
+)
+def tpcds_q26(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q26 shape (tpcds/q26.sql: q07's catalog twin — per-item
+    quantity/list/coupon/sales averages under a three-way demographic
+    gate plus an OR'd promotion-channel gate). Demographics analog:
+    mktsegment + orderstatus; promotion OR: order priority. Averages
+    divide exact cents by counts → identical doubles."""
+    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
+    j = (
+        li.join(orders.filter((F.col("o_orderstatus") == "F")
+                              & (F.year("o_orderdate") == 1997)
+                              & F.col("o_orderpriority").isin("3-MEDIUM", "4-NOT SPECIFIED")),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust.filter(F.col("c_mktsegment") == "AUTOMOBILE"),
+              F.col("o_custkey") == F.col("c_custkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
+    )
+    return (
+        j.groupBy(F.col("p_partkey").alias("i_item_id"))
+        .agg(
+            F.round(F.avg("l_quantity"), 6).alias("agg1"),
+            F.round(F.avg(F.round(F.col("l_extendedprice") * (1 + F.col("l_tax")) * 100)), 6).alias("agg2"),
+            F.round(F.avg(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100)), 6).alias("agg3"),
+            F.round(F.avg(F.round(F.col("l_extendedprice") * 100)), 6).alias("agg4"),
+        )
+        .orderBy(F.asc("i_item_id"))
+        .limit(100)
+    )
+
+
+# --- q27: rollup with GROUPING() over item x state -------------------------
+
+@_q(
+    "tpcds_q27",
+    """
+SELECT p.p_brand AS i_item_id, n.n_name AS s_state,
+       CAST(grouping(n.n_name) AS INTEGER) AS g_state,
+       round(avg(l.l_quantity), 6) AS agg1,
+       round(avg(round(l.l_extendedprice * (1 + l.l_tax) * 100)), 6) AS agg2,
+       round(avg(round(l.l_extendedprice * l.l_discount * 100)), 6) AS agg3,
+       round(avg(round(l.l_extendedprice * 100)), 6) AS agg4
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+JOIN supplier s ON l.l_suppkey = s.s_suppkey
+JOIN nation n ON s.s_nationkey = n.n_nationkey
+JOIN part p ON l.l_partkey = p.p_partkey
+WHERE c.c_mktsegment = 'BUILDING' AND year(o.o_orderdate) = 1996
+  AND s.s_nationkey IN (3, 7, 11)
+GROUP BY ROLLUP (p.p_brand, n.n_name)
+ORDER BY i_item_id ASC NULLS FIRST, s_state ASC NULLS FIRST
+LIMIT 100
+""",
+)
+def tpcds_q27(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q27 shape (tpcds/q27.sql: demographic-gated store averages
+    under ROLLUP(item, state) with the GROUPING(s_state) marker column —
+    the rollup + grouping-function pairing). State analog: supplier
+    nation, three states. Scale: one rollup aggregation; dims
+    broadcast."""
+    li, orders, cust, supp, nation, part = _t(
+        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation", "part")
+    j = (
+        li.join(orders.filter(F.year("o_orderdate") == 1996),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust.filter(F.col("c_mktsegment") == "BUILDING"),
+              F.col("o_custkey") == F.col("c_custkey"))
+        .join(supp.filter(F.col("s_nationkey").isin(3, 7, 11)),
+              F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
+    )
+    return (
+        j.rollup("p_brand", "n_name")
+        .agg(
+            F.grouping("n_name").cast("int").alias("g_state"),
+            F.round(F.avg("l_quantity"), 6).alias("agg1"),
+            F.round(F.avg(F.round(F.col("l_extendedprice") * (1 + F.col("l_tax")) * 100)), 6).alias("agg2"),
+            F.round(F.avg(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100)), 6).alias("agg3"),
+            F.round(F.avg(F.round(F.col("l_extendedprice") * 100)), 6).alias("agg4"),
+        )
+        .select(F.col("p_brand").alias("i_item_id"), F.col("n_name").alias("s_state"),
+                "g_state", "agg1", "agg2", "agg3", "agg4")
+        .orderBy(F.asc_nulls_first("i_item_id"), F.asc_nulls_first("s_state"))
+        .limit(100)
+    )
+
+
+# --- q28: six quantity-band list-price buckets (single pass) ---------------
+
+_Q28_BANDS = [
+    (1, 0, 5, 90500, 91500), (2, 6, 10, 90800, 91800), (3, 11, 15, 91100, 92100),
+    (4, 16, 20, 91400, 92400), (5, 21, 25, 91700, 92700), (6, 26, 30, 92000, 93000),
+]
+
+
+def _q28_cond_sql(lo, hi, plo, phi):
+    return (f"l_quantity BETWEEN {lo} AND {hi} AND "
+            f"(round(l_extendedprice * 100) BETWEEN {plo} AND {phi} "
+            f"OR round(l_extendedprice * l_discount * 100) BETWEEN 200 AND 5200 "
+            f"OR round(l_extendedprice * l_tax * 100) BETWEEN 100 AND 4100)")
+
+
+@_q(
+    "tpcds_q28",
+    "SELECT "
+    + ", ".join(
+        f"round(avg(CASE WHEN {_q28_cond_sql(lo, hi, plo, phi)} THEN round(l_extendedprice * 100) END), 6) AS b{b}_lp, "
+        f"CAST(count(CASE WHEN {_q28_cond_sql(lo, hi, plo, phi)} THEN 1 END) AS BIGINT) AS b{b}_cnt, "
+        f"CAST(count(DISTINCT CASE WHEN {_q28_cond_sql(lo, hi, plo, phi)} THEN round(l_extendedprice * 100) END) AS BIGINT) AS b{b}_cntd"
+        for b, lo, hi, plo, phi in _Q28_BANDS
+    )
+    + " FROM lineitem",
+)
+def tpcds_q28(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q28 shape (tpcds/q28.sql: six quantity-band buckets — each
+    with an OR'd price/coupon/wholesale gate — reporting avg list price,
+    count and DISTINCT count per bucket in one row). The reference spells
+    six derived-table scans cross-joined; implemented as ONE scan with
+    conditional aggregation — six fact scans collapse to a single pass
+    (the q88 pattern; 6x less IO at scale, same single-row result).
+    List-price cents keep the averages exact."""
+    (li,) = _t(spark, sf_dir, "lineitem")
+    aggs = []
+    for b, lo, hi, plo, phi in _Q28_BANDS:
+        cond = (
+            F.col("l_quantity").between(lo, hi)
+            & (
+                F.round(F.col("l_extendedprice") * 100).between(plo, phi)
+                | F.round(F.col("l_extendedprice") * F.col("l_discount") * 100).between(200, 5200)
+                | F.round(F.col("l_extendedprice") * F.col("l_tax") * 100).between(100, 4100)
+            )
+        )
+        lp = F.when(cond, F.round(F.col("l_extendedprice") * 100))
+        aggs += [
+            F.round(F.avg(lp), 6).alias(f"b{b}_lp"),
+            F.count(F.when(cond, 1)).cast("bigint").alias(f"b{b}_cnt"),
+            F.countDistinct(lp).cast("bigint").alias(f"b{b}_cntd"),
+        ]
+    return li.agg(*aggs)
+
+
+# --- q43: weekday sales matrix per store -----------------------------------
+
+@_q(
+    "tpcds_q43",
+    f"""
+SELECT s.s_name AS s_store_name, s.s_suppkey AS s_store_id,
+       {", ".join(
+           f"CAST(sum(CASE WHEN (datediff('day', DATE '1970-01-01', o.o_orderdate) + 4) % 7 = {d} "
+           f"THEN round(l.l_extendedprice * 100) ELSE NULL END) AS BIGINT) AS {n}_sales"
+           for d, n in [(0, "sun"), (1, "mon"), (2, "tue"), (3, "wed"),
+                        (4, "thu"), (5, "fri"), (6, "sat")])}
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN supplier s ON l.l_suppkey = s.s_suppkey
+WHERE s.s_nationkey < 12 AND year(o.o_orderdate) = 1996
+GROUP BY 1, 2
+ORDER BY s_store_name ASC, s_store_id ASC
+LIMIT 100
+""",
+)
+def tpcds_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q43 shape (tpcds/q43.sql: per-store Sunday..Saturday sales
+    matrix for one year in one timezone band — seven conditional sums off
+    the day name). Day-of-week via epoch-day mod 7 (identical formula in
+    both engines — no dow-convention skew); timezone gate: supplier
+    nation band. Scale: one scan, one grouping — not seven."""
+    li, orders, supp = _t(spark, sf_dir, "lineitem", "orders", "supplier")
+    j = (
+        li.join(orders.filter(F.year("o_orderdate") == 1996),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(supp.filter(F.col("s_nationkey") < 12),
+              F.col("l_suppkey") == F.col("s_suppkey"))
+    )
+    dow = (F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date")) + 4) % 7
+    names = ["sun", "mon", "tue", "wed", "thu", "fri", "sat"]
+    return (
+        j.groupBy(F.col("s_name").alias("s_store_name"),
+                  F.col("s_suppkey").alias("s_store_id"))
+        .agg(*[
+            F.sum(F.when(dow == d, F.round(F.col("l_extendedprice") * 100)))
+            .cast("bigint").alias(f"{n}_sales")
+            for d, n in enumerate(names)
+        ])
+        .orderBy(F.asc("s_store_name"), F.asc("s_store_id"))
+        .limit(100)
+    )
+
+
+# --- q89: monthly deviation from the (item, store) mean --------------------
+
+@_q(
+    "tpcds_q89",
+    f"""
+WITH g AS (
+  SELECT p.p_type AS i_category, p.p_brand AS i_brand, s.s_name AS s_store_name,
+         month(o.o_orderdate) AS d_moy,
+         {_msum_sql("l.l_extendedprice")} AS sum_sales,
+         {_csum_sql("l.l_extendedprice")} AS c
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN part p ON l.l_partkey = p.p_partkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  WHERE year(o.o_orderdate) = 1996 AND {_BANDS_SQL}
+  GROUP BY 1, 2, 3, 4
+), v AS (
+  SELECT *, sum(c) OVER (PARTITION BY i_category, i_brand, s_store_name) AS key_sum_c,
+         count(*) OVER (PARTITION BY i_category, i_brand, s_store_name) AS key_cnt
+  FROM g
+)
+SELECT i_category, i_brand, s_store_name, d_moy, sum_sales,
+       CAST(key_sum_c AS DOUBLE) / (100 * key_cnt) AS avg_monthly_sales
+FROM v
+WHERE key_sum_c <> 0 AND 10 * abs(c * key_cnt - key_sum_c) > abs(key_sum_c)
+ORDER BY c * key_cnt - key_sum_c ASC, s_store_name ASC, i_category ASC,
+         i_brand ASC, d_moy ASC
+LIMIT 100
+""",
+)
+def tpcds_q89(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q89 shape (tpcds/q89.sql: months whose store-item-class
+    sales deviate >10% from the (category, brand, store) yearly mean —
+    agg-over-window above a grouped frame gated by the two-band
+    disjunctive category/class filter, ordered by the signed deviation).
+    Deviation and ordering keys are exact cross-multiplied integers."""
+    li, orders, part, supp = _t(spark, sf_dir, "lineitem", "orders", "part", "supplier")
+    g = (
+        li.join(orders.filter(F.year("o_orderdate") == 1996),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(part.filter(_bands_col()), F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .groupBy(F.col("p_type").alias("i_category"), F.col("p_brand").alias("i_brand"),
+                 F.col("s_name").alias("s_store_name"),
+                 F.month("o_orderdate").alias("d_moy"))
+        .agg(_msum(F.col("l_extendedprice")).alias("sum_sales"),
+             # window re-sums in arbitrary order → run it over exact cents
+             _csum(F.col("l_extendedprice")).alias("_c"))
+    )
+    w = W.partitionBy("i_category", "i_brand", "s_store_name")
+    v = g.withColumn("key_sum_c", F.sum("_c").over(w)).withColumn(
+        "key_cnt", F.count("*").over(w)
+    )
+    return (
+        v.filter((F.col("key_sum_c") != 0)
+                 & (10 * F.abs(F.col("_c") * F.col("key_cnt") - F.col("key_sum_c"))
+                    > F.abs(F.col("key_sum_c"))))
+        .select("i_category", "i_brand", "s_store_name", "d_moy", "sum_sales",
+                (F.col("key_sum_c").cast("double") / (100 * F.col("key_cnt")))
+                .alias("avg_monthly_sales"),
+                (F.col("_c") * F.col("key_cnt") - F.col("key_sum_c")).alias("_dev"))
+        .orderBy(F.asc("_dev"), F.asc("s_store_name"), F.asc("i_category"),
+                 F.asc("i_brand"), F.asc("d_moy"))
+        .limit(100)
+        .drop("_dev")
+    )
+
+
+# --- q22: four-level rollup of average on-hand quantity --------------------
+
+@_q(
+    "tpcds_q22",
+    """
+SELECT p.p_name AS i_product_name, p.p_brand AS i_brand, p.p_type AS i_class,
+       CAST(p.p_size AS INTEGER) AS i_category,
+       round(avg(l.l_quantity), 6) AS qoh
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN part p ON l.l_partkey = p.p_partkey
+WHERE year(o.o_orderdate) = 1996
+GROUP BY ROLLUP (p.p_name, p.p_brand, p.p_type, CAST(p.p_size AS INTEGER))
+ORDER BY qoh ASC, i_product_name ASC NULLS FIRST, i_brand ASC NULLS FIRST,
+         i_class ASC NULLS FIRST, i_category ASC NULLS FIRST
+LIMIT 100
+""",
+)
+def tpcds_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q22 shape (tpcds/q22.sql: average on-hand inventory under a
+    FOUR-level ROLLUP(product, brand, class, category) over a 12-month
+    window — the deepest rollup in the corpus). Inventory analog:
+    lineitem quantities. The average divides exact ints → identical
+    doubles. Scale: one rollup aggregation (Spark expands grouping sets
+    in a single Expand+HashAggregate pass)."""
+    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    j = (
+        li.join(orders.filter(F.year("o_orderdate") == 1996),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
+    )
+    return (
+        j.rollup("p_name", "p_brand", "p_type", F.col("p_size").cast("int"))
+        .agg(F.round(F.avg("l_quantity"), 6).alias("qoh"))
+        .select(
+            F.col("p_name").alias("i_product_name"), F.col("p_brand").alias("i_brand"),
+            F.col("p_type").alias("i_class"),
+            F.col("p_size").alias("i_category"), "qoh",
+        )
+        .orderBy(F.asc("qoh"), F.asc_nulls_first("i_product_name"),
+                 F.asc_nulls_first("i_brand"), F.asc_nulls_first("i_class"),
+                 F.asc_nulls_first("i_category"))
+        .limit(100)
+    )
+
+
+# --- q39: month-over-month inventory variability self-join -----------------
+
+def _q39_sql(cov1_min: float | None) -> str:
+    """Shared q39 oracle text — the reference's q39_2.sql is q39_1.sql
+    plus one extra predicate, ``inv1.cov > 1.5`` (adapted threshold
+    below: the synthetic quantities' cov tops out ~1.1)."""
+    extra = f" AND inv1.cov > {cov1_min}" if cov1_min is not None else ""
+    return f"""
+WITH foo AS (
+  SELECT s.s_nationkey % 5 AS w_warehouse_sk,
+         l.l_partkey % 20 AS i_item_sk, month(o.o_orderdate) AS d_moy,
+         stddev_samp(l.l_quantity) AS stdev, avg(l.l_quantity) AS mean
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  WHERE year(o.o_orderdate) = 1996
+  GROUP BY 1, 2, 3
+), inv AS (
+  SELECT w_warehouse_sk, i_item_sk, d_moy,
+         round(mean, 6) AS mean,
+         round(CASE WHEN mean = 0 THEN NULL ELSE stdev / mean END, 6) AS cov
+  FROM foo
+  WHERE (CASE WHEN mean = 0 THEN 0 ELSE stdev / mean END) > 0.5
+)
+SELECT inv1.w_warehouse_sk AS wsk1, inv1.i_item_sk AS isk1, inv1.d_moy AS moy1,
+       inv1.mean AS mean1, inv1.cov AS cov1,
+       inv2.d_moy AS moy2, inv2.mean AS mean2, inv2.cov AS cov2
+FROM inv inv1
+JOIN inv inv2 ON inv1.i_item_sk = inv2.i_item_sk
+ AND inv1.w_warehouse_sk = inv2.w_warehouse_sk
+WHERE inv1.d_moy = 1 AND inv2.d_moy = 2{extra}
+ORDER BY wsk1, isk1, mean1, cov1, mean2, cov2
+LIMIT 100
+"""
+
+
+@_q("tpcds_q39", _q39_sql(None))
+def tpcds_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q39 shape (tpcds/q39_1.sql: per (warehouse, item, month)
+    inventory mean and stddev, keep high coefficient-of-variation groups,
+    self-join January against February of the same (warehouse, item) —
+    the variability screen). Warehouse analog: supplier-nation band, item
+    bucket: partkey mod 20 (the synthetic data is too sparse for
+    per-(supplier, part, month) stddevs); threshold 0.5 (the reference's
+    1.0 is above the uniform quantities' cov). Scale: one
+    grouping, then a self-join of the small filtered frame."""
+    return _q39_join(spark, sf_dir, cov1_min=None)
+
+
+@_q("tpcds_q39_2", _q39_sql(0.65))
+def tpcds_q39_2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q39 SECOND benchto variant (tpcds/q39_2.sql — VERDICT r09
+    #5): identical CTE and self-join, plus the extra January-side
+    coefficient-of-variation screen (reference: ``inv1.cov > 1.5`` on a
+    CTE already filtered at 1.0; here 0.65 over the CTE's 0.5 — the
+    measured cov quartiles of the synthetic quantities are 0.46/0.58/0.69,
+    so the screen keeps roughly the top January quartile, biting without
+    emptying)."""
+    return _q39_join(spark, sf_dir, cov1_min=0.65)
+
+
+def _q39_join(
+    spark: SparkSession, sf_dir: str, cov1_min: float | None
+) -> DataFrame:
+    li, orders, supp = _t(spark, sf_dir, "lineitem", "orders", "supplier")
+    foo = (
+        li.join(orders.filter(F.year("o_orderdate") == 1996),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .groupBy((F.col("s_nationkey") % 5).alias("w_warehouse_sk"),
+                 (F.col("l_partkey") % 20).alias("i_item_sk"),
+                 F.month("o_orderdate").alias("d_moy"))
+        .agg(F.stddev_samp("l_quantity").alias("stdev"), F.avg("l_quantity").alias("mean"))
+    )
+    inv = (
+        foo.filter(F.when(F.col("mean") == 0, F.lit(0.0))
+                   .otherwise(F.col("stdev") / F.col("mean")) > 0.5)
+        .select("w_warehouse_sk", "i_item_sk", "d_moy",
+                F.round("mean", 6).alias("mean"),
+                F.round(F.when(F.col("mean") == 0, F.lit(None))
+                        .otherwise(F.col("stdev") / F.col("mean")), 6).alias("cov"))
+    )
+    i1 = inv.filter(F.col("d_moy") == 1)
+    if cov1_min is not None:
+        i1 = i1.filter(F.col("cov") > cov1_min)
+    i1 = i1.alias("inv1")
+    i2 = inv.filter(F.col("d_moy") == 2).alias("inv2")
+    return (
+        i1.join(i2, (F.col("inv1.i_item_sk") == F.col("inv2.i_item_sk"))
+                & (F.col("inv1.w_warehouse_sk") == F.col("inv2.w_warehouse_sk")))
+        .select(F.col("inv1.w_warehouse_sk").alias("wsk1"),
+                F.col("inv1.i_item_sk").alias("isk1"),
+                F.col("inv1.d_moy").alias("moy1"),
+                F.col("inv1.mean").alias("mean1"), F.col("inv1.cov").alias("cov1"),
+                F.col("inv2.d_moy").alias("moy2"),
+                F.col("inv2.mean").alias("mean2"), F.col("inv2.cov").alias("cov2"))
+        .orderBy("wsk1", "isk1", "mean1", "cov1", "mean2", "cov2")
+        .limit(100)
+    )
+
+
+# --- q40: net catalog sales before/after a pivot, returns subtracted -------
+
+@_q(
+    "tpcds_q40",
+    """
+SELECT n.n_name AS w_state, p.p_partkey AS i_item_id,
+       CAST(sum(CASE WHEN o.o_orderdate < '1996-03-11'
+                THEN round(l.l_extendedprice * 100) - coalesce(round(r.r_price * 100), 0)
+                ELSE 0 END) AS BIGINT) AS sales_before,
+       CAST(sum(CASE WHEN o.o_orderdate >= '1996-03-11'
+                THEN round(l.l_extendedprice * 100) - coalesce(round(r.r_price * 100), 0)
+                ELSE 0 END) AS BIGINT) AS sales_after
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+LEFT JOIN (SELECT l_orderkey AS r_orderkey, l_partkey AS r_partkey,
+                  l_extendedprice * l_discount AS r_price
+           FROM lineitem WHERE l_returnflag = 'R') r
+  ON l.l_orderkey = r.r_orderkey AND l.l_partkey = r.r_partkey
+JOIN supplier s ON l.l_suppkey = s.s_suppkey
+JOIN nation n ON s.s_nationkey = n.n_nationkey
+JOIN part p ON l.l_partkey = p.p_partkey
+WHERE l.l_returnflag <> 'R'
+  AND p.p_retailprice BETWEEN 905 AND 911
+  AND o.o_orderdate BETWEEN '1996-02-10' AND '1996-04-10'
+GROUP BY 1, 2
+ORDER BY w_state ASC, i_item_id ASC
+LIMIT 100
+""",
+)
+def tpcds_q40(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q40 shape (tpcds/q40.sql: catalog sales net of their
+    row-level returns (LEFT join on order+item), split before/after a
+    pivot date per (warehouse state, item) over a ±30-day window with an
+    item price band). Warehouse state analog: supplier nation. All cents
+    exact."""
+    li, orders, supp, nation, part = _t(
+        spark, sf_dir, "lineitem", "orders", "supplier", "nation", "part")
+    r = li.filter(F.col("l_returnflag") == "R").select(
+        F.col("l_orderkey").alias("r_orderkey"),
+        F.col("l_partkey").alias("r_partkey"),
+        (F.col("l_extendedprice") * F.col("l_discount")).alias("r_price"),
+    )
+    j = (
+        li.filter(F.col("l_returnflag") != "R")
+        .join(orders.filter(F.col("o_orderdate").between("1996-02-10", "1996-04-10")),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(r, (F.col("l_orderkey") == F.col("r_orderkey"))
+              & (F.col("l_partkey") == F.col("r_partkey")), "left")
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(part.filter(F.col("p_retailprice").between(905, 911)),
+              F.col("l_partkey") == F.col("p_partkey"))
+    )
+    net = (F.round(F.col("l_extendedprice") * 100)
+           - F.coalesce(F.round(F.col("r_price") * 100), F.lit(0)))
+    return (
+        j.groupBy(F.col("n_name").alias("w_state"), F.col("p_partkey").alias("i_item_id"))
+        .agg(
+            F.sum(F.when(F.col("o_orderdate") < "1996-03-11", net).otherwise(0))
+            .cast("bigint").alias("sales_before"),
+            F.sum(F.when(F.col("o_orderdate") >= "1996-03-11", net).otherwise(0))
+            .cast("bigint").alias("sales_after"),
+        )
+        .orderBy(F.asc("w_state"), F.asc("i_item_id"))
+        .limit(100)
+    )
+
+
+# --- q41: manufacturers with items matching a deep attribute battery -------
+
+_Q41_BATTERY_SQL = (
+    "((p_type = 'STANDARD' AND p_brand IN ('Brand#11', 'Brand#12', 'Brand#13')) "
+    "OR (p_type = 'SMALL' AND p_brand IN ('Brand#14', 'Brand#15', 'Brand#21')) "
+    "OR (p_type = 'ECONOMY' AND p_brand IN ('Brand#22', 'Brand#23', 'Brand#24')) "
+    "OR (p_type = 'MEDIUM' AND p_brand IN ('Brand#25', 'Brand#31', 'Brand#32')))"
+)
+
+
+@_q(
+    "tpcds_q41",
+    f"""
+SELECT DISTINCT i1.p_name AS i_product_name
+FROM part i1
+WHERE i1.p_size BETWEEN 10 AND 30
+  AND (SELECT count(*) FROM part i2
+       WHERE i2.p_size = i1.p_size AND {_Q41_BATTERY_SQL.replace('p_type', 'i2.p_type').replace('p_brand', 'i2.p_brand')}) > 0
+ORDER BY i_product_name ASC
+LIMIT 100
+""",
+)
+def tpcds_q41(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q41 shape (tpcds/q41.sql: DISTINCT product names whose
+    MANUFACTURER has at least one item matching a deep OR'd
+    (category, color, units, size) attribute battery — a correlated
+    count(*) > 0 on the item dimension itself, i.e. a self semi-join of
+    the dim). Manufacturer analog: p_size; battery: (type, brand) bands.
+    Decorrelated as a distinct-key semi-join — the exact plan Presto's
+    optimizer builds."""
+    (part,) = _t(spark, sf_dir, "part")
+    battery = (
+        ((F.col("p_type") == "STANDARD") & F.col("p_brand").isin("Brand#11", "Brand#12", "Brand#13"))
+        | ((F.col("p_type") == "SMALL") & F.col("p_brand").isin("Brand#14", "Brand#15", "Brand#21"))
+        | ((F.col("p_type") == "ECONOMY") & F.col("p_brand").isin("Brand#22", "Brand#23", "Brand#24"))
+        | ((F.col("p_type") == "MEDIUM") & F.col("p_brand").isin("Brand#25", "Brand#31", "Brand#32"))
+    )
+    matching = part.filter(battery).select(F.col("p_size").alias("m_size")).distinct()
+    return (
+        part.filter(F.col("p_size").between(10, 30))
+        .join(matching, F.col("m_size") == F.col("p_size"), "left_semi")
+        .select(F.col("p_name").alias("i_product_name"))
+        .distinct()
+        .orderBy(F.asc("i_product_name"))
+        .limit(100)
+    )
+
+
+# --- q73: trip party-size counts between 1 and 5 ---------------------------
+
+@_q(
+    "tpcds_q73",
+    """
+WITH dj AS (
+  SELECT o.o_orderkey AS ss_ticket_number, o.o_custkey AS ss_customer_sk,
+         CAST(count(*) AS BIGINT) AS cnt
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  WHERE day(o.o_orderdate) BETWEEN 1 AND 2
+    AND (l.l_quantity = 4 OR l.l_linenumber = 3)
+    AND year(o.o_orderdate) IN (1996, 1997, 1998)
+    AND s.s_nationkey IN (2, 4, 6, 8)
+  GROUP BY 1, 2
+)
+SELECT c.c_name, c.c_mktsegment, dj.ss_ticket_number, dj.cnt
+FROM dj
+JOIN customer c ON dj.ss_customer_sk = c.c_custkey
+WHERE dj.cnt BETWEEN 1 AND 5
+ORDER BY dj.cnt DESC, c.c_name ASC, dj.ss_ticket_number ASC
+""",
+)
+def tpcds_q73(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q73 shape (tpcds/q73.sql: month-start store trips under a
+    household-demographic OR gate in four counties, keeping trips with
+    1-5 qualifying lines, reported with the customer — q46's counting
+    sibling; no LIMIT in the reference, deterministic total order
+    added)."""
+    li, orders, supp, cust = _t(spark, sf_dir, "lineitem", "orders", "supplier", "customer")
+    dj = (
+        li.filter((F.col("l_quantity") == 4) | (F.col("l_linenumber") == 3))
+        .join(orders.filter(F.dayofmonth("o_orderdate").between(1, 2)
+                            & F.year("o_orderdate").isin(1996, 1997, 1998)),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(supp.filter(F.col("s_nationkey").isin(2, 4, 6, 8)),
+              F.col("l_suppkey") == F.col("s_suppkey"))
+        .groupBy(F.col("o_orderkey").alias("ss_ticket_number"),
+                 F.col("o_custkey").alias("ss_customer_sk"))
+        .agg(F.count("*").cast("bigint").alias("cnt"))
+    )
+    return (
+        dj.filter(F.col("cnt").between(1, 5))
+        .join(cust, F.col("ss_customer_sk") == F.col("c_custkey"))
+        .select("c_name", "c_mktsegment", "ss_ticket_number", "cnt")
+        .orderBy(F.desc("cnt"), F.asc("c_name"), F.asc("ss_ticket_number"))
+    )
+
+
+# --- q84: income-band customers with a recorded return ---------------------
+
+@_q(
+    "tpcds_q84",
+    """
+SELECT c.c_custkey AS customer_id,
+       c.c_name || ', ' || c.c_mktsegment AS customername
+FROM customer c
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+WHERE n.n_name = 'NATION_3'
+  AND c.c_acctbal BETWEEN 1000 AND 6000
+  AND EXISTS (SELECT 1 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+              WHERE o.o_custkey = c.c_custkey AND l.l_returnflag = 'R')
+ORDER BY customer_id ASC
+LIMIT 100
+""",
+)
+def tpcds_q84(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q84 shape (tpcds/q84.sql: customers in one city whose
+    household income band sits in a 50k window and who appear in
+    store_returns — a five-dim chain ending in a fact semi-join).
+    City analog: nation; income band: acctbal window; the returns
+    check is a semi-join through orders. Output concatenates the
+    name as the reference does."""
+    cust, nation, li, orders = _t(spark, sf_dir, "customer", "nation", "lineitem", "orders")
+    returned_cust = (
+        li.filter(F.col("l_returnflag") == "R")
+        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .select(F.col("o_custkey").alias("rc_custkey"))
+    )
+    return (
+        cust.filter(F.col("c_acctbal").between(1000, 6000))
+        .join(nation.filter(F.col("n_name") == "NATION_3"),
+              F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(returned_cust, F.col("rc_custkey") == F.col("c_custkey"), "left_semi")
+        .select(F.col("c_custkey").alias("customer_id"),
+                F.concat(F.col("c_name"), F.lit(", "), F.col("c_mktsegment")).alias("customername"))
+        .orderBy(F.asc("customer_id"))
+        .limit(100)
+    )
+
+
+# --- q91: call-center return losses under demographic bands ----------------
+
+@_q(
+    "tpcds_q91",
+    f"""
+SELECT o.o_orderpriority AS call_center, c.c_mktsegment AS cd_marital_status,
+       {_csum_sql("l.l_extendedprice")} AS returns_loss
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+WHERE l.l_returnflag = 'R'
+  AND year(o.o_orderdate) = 1996 AND month(o.o_orderdate) = 11
+  AND (c.c_mktsegment = 'BUILDING' OR c.c_mktsegment = 'MACHINERY')
+  AND c.c_nationkey < 12
+GROUP BY 1, 2
+ORDER BY returns_loss DESC, call_center ASC, cd_marital_status ASC
+""",
+)
+def tpcds_q91(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q91 shape (tpcds/q91.sql: catalog return losses per call
+    center for one month, customers gated by an OR of
+    (marital, education) bands plus buy-potential and gmt-offset
+    filters, ordered by loss). Call center analog: order priority;
+    demographic bands: mktsegment; gmt band: nationkey. No LIMIT in the
+    reference; ordering keys are exact cents + text."""
+    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
+    j = (
+        li.filter(F.col("l_returnflag") == "R")
+        .join(orders.filter((F.year("o_orderdate") == 1996)
+                            & (F.month("o_orderdate") == 11)),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust.filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
+                          & (F.col("c_nationkey") < 12)),
+              F.col("o_custkey") == F.col("c_custkey"))
+    )
+    return (
+        j.groupBy(F.col("o_orderpriority").alias("call_center"),
+                  F.col("c_mktsegment").alias("cd_marital_status"))
+        .agg(_csum(F.col("l_extendedprice")).alias("returns_loss"))
+        .orderBy(F.desc("returns_loss"), F.asc("call_center"),
+                 F.asc("cd_marital_status"))
+    )
+
+
+# --- q56 / q60: three-channel totals for an item subset --------------------
+
+def _chan3_sql(item_cond_sql, year, moy, nat_band):
+    def chan(flag):
+        return f"""
+  SELECT l.l_partkey AS i_item_id, {_csum_sql("l.l_extendedprice")} AS total_sales
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  WHERE l.l_partkey IN (SELECT p_partkey FROM part WHERE {item_cond_sql})
+    AND l.l_returnflag = '{flag}'
+    AND year(o.o_orderdate) = {year} AND month(o.o_orderdate) = {moy}
+    AND c.c_nationkey < {nat_band}
+  GROUP BY 1"""
+
+    return f"""
+WITH ss AS ({chan('N')}), cs AS ({chan('A')}), ws AS ({chan('R')})
+SELECT i_item_id, CAST(sum(total_sales) AS BIGINT) AS total_sales
+FROM (SELECT * FROM ss UNION ALL SELECT * FROM cs UNION ALL SELECT * FROM ws) tmp
+GROUP BY i_item_id
+"""
+
+
+def _chan3(spark, sf_dir, item_cond, year, moy, nat_band):
+    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
+    items = part.filter(item_cond).select(F.col("p_partkey").alias("sel_partkey"))
+    base = (
+        li.join(orders.filter((F.year("o_orderdate") == year)
+                              & (F.month("o_orderdate") == moy)),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust.filter(F.col("c_nationkey") < nat_band),
+              F.col("o_custkey") == F.col("c_custkey"))
+        .join(items, F.col("sel_partkey") == F.col("l_partkey"), "left_semi")
+    )
+
+    def chan(flag):
+        return (
+            base.filter(F.col("l_returnflag") == flag)
+            .groupBy(F.col("l_partkey").alias("i_item_id"))
+            .agg(_csum(F.col("l_extendedprice")).alias("total_sales"))
+        )
+
+    return (
+        chan("N").unionByName(chan("A")).unionByName(chan("R"))
+        .groupBy("i_item_id")
+        .agg(F.sum("total_sales").cast("bigint").alias("total_sales"))
+    )
+
+
+@_q(
+    "tpcds_q56",
+    _chan3_sql("p_brand IN ('Brand#11', 'Brand#21', 'Brand#31')", 1996, 2, 13)
+    + "ORDER BY total_sales ASC, i_item_id ASC LIMIT 100",
+)
+def tpcds_q56(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q56 shape (tpcds/q56.sql: per-item totals across the three
+    sales channels for items in three colors, one month, one gmt band —
+    three structurally identical CTEs (each with an item-id IN subquery)
+    UNION ALL'd and re-grouped). Color analog: brand set; channels:
+    returnflag slices; gmt: nation band."""
+    return _chan3(
+        spark, sf_dir,
+        F.col("p_brand").isin("Brand#11", "Brand#21", "Brand#31"), 1996, 2, 13,
+    ).orderBy(F.asc("total_sales"), F.asc("i_item_id")).limit(100)
+
+
+@_q(
+    "tpcds_q60",
+    _chan3_sql("p_type = 'ECONOMY'", 1997, 9, 11)
+    + "ORDER BY i_item_id ASC, total_sales ASC LIMIT 100",
+)
+def tpcds_q60(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q60 shape (tpcds/q60.sql: q56's category twin — same
+    three-channel CTE union for one category/month/gmt band, item-first
+    ordering)."""
+    return _chan3(
+        spark, sf_dir, F.col("p_type") == "ECONOMY", 1997, 9, 11,
+    ).orderBy(F.asc("i_item_id"), F.asc("total_sales")).limit(100)
+
+
+# --- q69: store-only customers' demographic profile ------------------------
+
+@_q(
+    "tpcds_q69",
+    """
+SELECT c.c_mktsegment AS cd_gender,
+       CAST(floor(c.c_acctbal / 1000) * 1000 AS BIGINT) AS cd_purchase_estimate,
+       CAST(c.c_nationkey % 3 AS INTEGER) AS cd_credit_rating,
+       CAST(count(*) AS BIGINT) AS cnt
+FROM customer c
+WHERE c.c_nationkey IN (2, 5, 8)
+  AND EXISTS (SELECT 1 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+              WHERE o.o_custkey = c.c_custkey AND l.l_returnflag = 'A'
+                AND year(o.o_orderdate) = 1996
+                AND month(o.o_orderdate) BETWEEN 4 AND 6)
+  AND NOT EXISTS (SELECT 1 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+                  WHERE o.o_custkey = c.c_custkey AND l.l_returnflag = 'N'
+                    AND year(o.o_orderdate) = 1996
+                    AND month(o.o_orderdate) BETWEEN 4 AND 6)
+  AND NOT EXISTS (SELECT 1 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+                  WHERE o.o_custkey = c.c_custkey AND l.l_returnflag = 'R'
+                    AND year(o.o_orderdate) = 1996
+                    AND month(o.o_orderdate) BETWEEN 4 AND 6)
+GROUP BY 1, 2, 3
+ORDER BY cd_gender ASC, cd_purchase_estimate ASC, cd_credit_rating ASC
+LIMIT 100
+""",
+)
+def tpcds_q69(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q69 shape (tpcds/q69.sql: the demographic profile of
+    customers in three states who bought in the STORE channel during one
+    quarter but NOT in the web or catalog channels — one EXISTS plus two
+    NOT EXISTS on the fact). Channels: returnflag slices; demographics:
+    mktsegment / acctbal band / nation band. Scale: one semi-join + two
+    anti-joins on the customer key, then a small grouping."""
+    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
+
+    def bought(flag):
+        return (
+            li.filter(F.col("l_returnflag") == flag)
+            .join(orders.filter((F.year("o_orderdate") == 1996)
+                                & F.month("o_orderdate").between(4, 6)),
+                  F.col("l_orderkey") == F.col("o_orderkey"))
+            .select(F.col("o_custkey").alias(f"{flag}_custkey"))
+        )
+
+    out = (
+        cust.filter(F.col("c_nationkey").isin(2, 5, 8))
+        .join(bought("A"), F.col("A_custkey") == F.col("c_custkey"), "left_semi")
+        .join(bought("N"), F.col("N_custkey") == F.col("c_custkey"), "left_anti")
+        .join(bought("R"), F.col("R_custkey") == F.col("c_custkey"), "left_anti")
+    )
+    return (
+        out.groupBy(
+            F.col("c_mktsegment").alias("cd_gender"),
+            (F.floor(F.col("c_acctbal") / 1000) * 1000).cast("bigint").alias("cd_purchase_estimate"),
+            (F.col("c_nationkey") % 3).cast("int").alias("cd_credit_rating"),
+        )
+        .agg(F.count("*").cast("bigint").alias("cnt"))
+        .orderBy(F.asc("cd_gender"), F.asc("cd_purchase_estimate"),
+                 F.asc("cd_credit_rating"))
+        .limit(100)
+    )
+
+
+# --- q70: state/county profit rollup with rank-within-parent ---------------
+
+@_q(
+    "tpcds_q70",
+    f"""
+WITH agg AS (
+  SELECT n.n_name AS s_state, s.s_name AS s_county,
+         {_msum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS total_sum,
+         CAST(grouping(n.n_name) AS INTEGER) AS g_state,
+         CAST(grouping(s.s_name) AS INTEGER) AS g_county
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN nation n ON s.s_nationkey = n.n_nationkey
+  WHERE year(o.o_orderdate) = 1996
+    AND n.n_name IN (
+      SELECT s_state FROM (
+        SELECT n2.n_name AS s_state,
+               rank() OVER (PARTITION BY n2.n_name
+                            ORDER BY sum(round(l2.l_extendedprice * 100)) DESC) AS ranking
+        FROM lineitem l2
+        JOIN orders o2 ON l2.l_orderkey = o2.o_orderkey
+        JOIN supplier s2 ON l2.l_suppkey = s2.s_suppkey
+        JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
+        WHERE year(o2.o_orderdate) = 1996
+        GROUP BY n2.n_name
+      ) tmp1 WHERE ranking <= 5
+    )
+  GROUP BY ROLLUP (n.n_name, s.s_name)
+)
+SELECT total_sum, s_state, s_county,
+       g_state + g_county AS lochierarchy,
+       CAST(rank() OVER (
+         PARTITION BY g_state + g_county,
+                      CASE WHEN g_county = 0 THEN s_state END
+         ORDER BY total_sum DESC) AS INTEGER) AS rank_within_parent
+FROM agg
+ORDER BY lochierarchy DESC,
+         CASE WHEN g_state + g_county = 0 THEN s_state END ASC NULLS FIRST,
+         rank_within_parent ASC, s_state ASC NULLS FIRST, s_county ASC NULLS FIRST
+LIMIT 100
+""",
+)
+def tpcds_q70(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q70 shape (tpcds/q70.sql: profit under ROLLUP(state, county)
+    with rank() partitioned by the GROUPING-function hierarchy level —
+    rank-within-parent — plus the reference's famous degenerate top-5
+    state subquery (rank() PARTITION BY the grouped key itself is always
+    1, so the IN keeps every state — faithfully reproduced). Scale:
+    rollup + one window over the small grouped frame."""
+    li, orders, supp, nation = _t(spark, sf_dir, "lineitem", "orders", "supplier", "nation")
+    j96 = (
+        li.join(orders.filter(F.year("o_orderdate") == 1996),
+                F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
+    )
+    top5 = (
+        j96.groupBy(F.col("n_name").alias("s_state"))
+        .agg(F.sum(F.round(F.col("l_extendedprice") * 100)).alias("t"))
+        .withColumn("ranking", F.rank().over(W.partitionBy("s_state").orderBy(F.desc("t"))))
+        .filter(F.col("ranking") <= 5)
+        .select(F.col("s_state").alias("sel_state"))
+    )
+    agg = (
+        j96.join(top5, F.col("sel_state") == F.col("n_name"), "left_semi")
+        .rollup("n_name", "s_name")
+        .agg(
+            _msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_sum"),
+            F.grouping("n_name").cast("int").alias("g_state"),
+            F.grouping("s_name").cast("int").alias("g_county"),
+        )
+    )
+    lo = F.col("g_state") + F.col("g_county")
+    wr = W.partitionBy(lo, F.when(F.col("g_county") == 0, F.col("n_name"))).orderBy(
+        F.desc("total_sum")
+    )
+    return (
+        agg.select(
+            "total_sum",
+            F.col("n_name").alias("s_state"), F.col("s_name").alias("s_county"),
+            lo.alias("lochierarchy"),
+            F.rank().over(wr).cast("int").alias("rank_within_parent"),
+            F.col("g_state"), F.col("g_county"),
+        )
+        .orderBy(
+            F.desc("lochierarchy"),
+            F.asc_nulls_first(F.when(F.col("g_state") + F.col("g_county") == 0,
+                                     F.col("s_state"))),
+            F.asc("rank_within_parent"),
+            F.asc_nulls_first("s_state"), F.asc_nulls_first("s_county"),
+        )
+        .select("total_sum", "s_state", "s_county", "lochierarchy", "rank_within_parent")
+        .limit(100)
+    )
+
+
+# --- q71: brand revenue by hour across three unioned channels --------------
+
+@_q(
+    "tpcds_q71",
+    f"""
+WITH tmp AS (
+  SELECT round(l.l_extendedprice * 100) AS ext_price, l.l_partkey AS sold_item_sk,
+         (l.l_orderkey * 7 + l.l_linenumber * 3) % 24 AS t_hour
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'N' AND month(o.o_orderdate) = 11 AND year(o.o_orderdate) = 1996
+  UNION ALL
+  SELECT round(l.l_extendedprice * 100), l.l_partkey,
+         (l.l_orderkey * 7 + l.l_linenumber * 3) % 24
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'A' AND month(o.o_orderdate) = 11 AND year(o.o_orderdate) = 1996
+  UNION ALL
+  SELECT round(l.l_extendedprice * 100), l.l_partkey,
+         (l.l_orderkey * 7 + l.l_linenumber * 3) % 24
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE l.l_returnflag = 'R' AND month(o.o_orderdate) = 11 AND year(o.o_orderdate) = 1996
+)
+SELECT p.p_brand AS brand, CAST(t_hour AS INTEGER) AS t_hour,
+       CAST(sum(ext_price) AS BIGINT) AS ext_price
+FROM tmp
+JOIN part p ON tmp.sold_item_sk = p.p_partkey
+WHERE p.p_partkey % 100 < 20
+  AND (t_hour BETWEEN 6 AND 9 OR t_hour BETWEEN 17 AND 20)
+GROUP BY 1, 2
+ORDER BY ext_price DESC, brand ASC, t_hour ASC
+""",
+)
+def tpcds_q71(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q71 shape (tpcds/q71.sql: one manager's brand revenue at
+    breakfast/dinner hours, the fact being a UNION ALL of all three
+    channels joined to time_dim — the all-channel hourly profile).
+    Hour analog: deterministic per-line hash mod 24 (the same synthetic
+    time the benchto adapter uses); meal bands 6-9/17-20; manager:
+    partkey band. No LIMIT in the reference."""
+    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    o_nov = orders.filter((F.month("o_orderdate") == 11) & (F.year("o_orderdate") == 1996))
+
+    def chan(flag):
+        return (
+            li.filter(F.col("l_returnflag") == flag)
+            .join(o_nov, F.col("l_orderkey") == F.col("o_orderkey"))
+            .select(
+                F.round(F.col("l_extendedprice") * 100).alias("ext_price"),
+                F.col("l_partkey").alias("sold_item_sk"),
+                ((F.col("l_orderkey") * 7 + F.col("l_linenumber") * 3) % 24).alias("t_hour"),
+            )
+        )
+
+    tmp = chan("N").unionByName(chan("A")).unionByName(chan("R"))
+    return (
+        tmp.join(part.filter(F.col("p_partkey") % 100 < 20),
+                 F.col("sold_item_sk") == F.col("p_partkey"))
+        .filter(F.col("t_hour").between(6, 9) | F.col("t_hour").between(17, 20))
+        .groupBy(F.col("p_brand").alias("brand"), F.col("t_hour").cast("int").alias("t_hour"))
+        .agg(F.sum("ext_price").cast("bigint").alias("ext_price"))
+        .orderBy(F.desc("ext_price"), F.asc("brand"), F.asc("t_hour"))
+    )
+
+
+# --- q85: returns under paired-demographic and address band ORs ------------
+
+@_q(
+    "tpcds_q85",
+    """
+SELECT concat('reason_', CAST(l.l_linenumber % 5 AS STRING)) AS r_reason_desc,
+       round(avg(l.l_quantity), 6) AS avg_quantity,
+       round(avg(round(l.l_extendedprice * l.l_discount * 100)), 6) AS avg_refunded,
+       round(avg(round(l.l_extendedprice * l.l_tax * 100)), 6) AS avg_fee
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+WHERE l.l_returnflag = 'R' AND year(o.o_orderdate) = 1996
+  AND ((c.c_mktsegment = 'BUILDING' AND o.o_orderstatus = 'F'
+        AND round(l.l_extendedprice * 100) BETWEEN 1000000 AND 5000000)
+    OR (c.c_mktsegment = 'MACHINERY' AND o.o_orderstatus = 'O'
+        AND round(l.l_extendedprice * 100) BETWEEN 500000 AND 3000000)
+    OR (c.c_mktsegment = 'AUTOMOBILE' AND o.o_orderstatus = 'P'
+        AND round(l.l_extendedprice * 100) BETWEEN 1500000 AND 6000000))
+  AND ((c.c_nationkey IN (1, 4, 7) AND round(l.l_extendedprice * (1 - l.l_discount) * 100) BETWEEN 100000 AND 20000000)
+    OR (c.c_nationkey IN (10, 13, 16) AND round(l.l_extendedprice * (1 - l.l_discount) * 100) BETWEEN 150000 AND 30000000)
+    OR (c.c_nationkey IN (19, 22, 24) AND round(l.l_extendedprice * (1 - l.l_discount) * 100) BETWEEN 50000 AND 25000000))
+GROUP BY 1
+ORDER BY r_reason_desc ASC, avg_quantity ASC, avg_refunded ASC, avg_fee ASC
+LIMIT 100
+""",
+)
+def tpcds_q85(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q85 shape (tpcds/q85.sql: web returns joined back to their
+    sales with PAIRED demographic bands — marital/education must match
+    across the refunding and returning demographics AND gate a price band
+    — plus an OR'd (state set, profit band) address gate, averaged per
+    return reason). Demographic pairing analog: (mktsegment, orderstatus)
+    bands; reason dim: linenumber mod 5. All band arithmetic exact
+    cents."""
+    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
+    price = F.round(F.col("l_extendedprice") * 100)
+    profit = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
+    demo = (
+        ((F.col("c_mktsegment") == "BUILDING") & (F.col("o_orderstatus") == "F")
+         & price.between(1000000, 5000000))
+        | ((F.col("c_mktsegment") == "MACHINERY") & (F.col("o_orderstatus") == "O")
+           & price.between(500000, 3000000))
+        | ((F.col("c_mktsegment") == "AUTOMOBILE") & (F.col("o_orderstatus") == "P")
+           & price.between(1500000, 6000000))
+    )
+    addr = (
+        (F.col("c_nationkey").isin(1, 4, 7) & profit.between(100000, 20000000))
+        | (F.col("c_nationkey").isin(10, 13, 16) & profit.between(150000, 30000000))
+        | (F.col("c_nationkey").isin(19, 22, 24) & profit.between(50000, 25000000))
+    )
+    j = (
+        li.filter(F.col("l_returnflag") == "R")
+        .join(orders.filter(F.year("o_orderdate") == 1996),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .filter(demo & addr)
+    )
+    return (
+        j.groupBy(
+            F.concat(F.lit("reason_"), (F.col("l_linenumber") % 5).cast("string"))
+            .alias("r_reason_desc")
+        )
+        .agg(
+            F.round(F.avg("l_quantity"), 6).alias("avg_quantity"),
+            F.round(F.avg(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100)), 6).alias("avg_refunded"),
+            F.round(F.avg(F.round(F.col("l_extendedprice") * F.col("l_tax") * 100)), 6).alias("avg_fee"),
+        )
+        .orderBy(F.asc("r_reason_desc"), F.asc("avg_quantity"),
+                 F.asc("avg_refunded"), F.asc("avg_fee"))
+        .limit(100)
+    )
+
+
+# --- q24: per-color netpaid vs 5% of the all-color average -----------------
+
+_Q24_BRANDS_1 = ("Brand#11", "Brand#12", "Brand#13", "Brand#14", "Brand#15")
+_Q24_BRANDS_2 = ("Brand#21", "Brand#22", "Brand#23", "Brand#24", "Brand#25")
+
+
+def _q24_sql(brands: tuple[str, ...]) -> str:
+    """Shared q24 oracle text — q24_1 and q24_2 differ ONLY in the color
+    band (the reference files are byte-identical apart from
+    'pale' vs 'chiffon': tpcds/q24_1.sql vs q24_2.sql)."""
+    blist = ", ".join(f"'{b}'" for b in brands)
+    return f"""
+WITH ssales AS (
+  SELECT c.c_name AS c_last_name, s.s_name AS s_store_name,
+         p.p_brand AS i_color,
+         {_csum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS netpaid
+  FROM lineitem l
+  JOIN (SELECT DISTINCT l_orderkey FROM lineitem WHERE l_returnflag = 'R') r
+    ON l.l_orderkey = r.l_orderkey
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN part p ON l.l_partkey = p.p_partkey
+  WHERE l.l_returnflag <> 'R' AND s.s_nationkey % 5 = c.c_nationkey % 5
+  GROUP BY 1, 2, 3
+)
+SELECT c_last_name, s_store_name, CAST(sum(netpaid) AS BIGINT) AS paid
+FROM ssales
+WHERE i_color IN ({blist})
+GROUP BY 1, 2
+HAVING sum(netpaid) > (SELECT 0.05 * avg(netpaid) FROM ssales)
+ORDER BY c_last_name ASC, s_store_name ASC
+"""
+
+
+@_q("tpcds_q24", _q24_sql(_Q24_BRANDS_1))
+def tpcds_q24(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q24 shape (tpcds/q24_1.sql: store purchases in RETURNED
+    orders (ticket-level return match — the per-(ticket, item) pair is
+    vacuous in the synthetic data) where
+    the customer's birth country matches the store's address, net paid
+    grouped per (customer, store, color, ...); the outer query keeps one
+    color band and reports (customer, store) totals exceeding 5% of the
+    ALL-color average — a scalar subquery over the same CTE, so the CTE
+    has TWO consumers and the cte-materialization property applies).
+    Color analog: brand; country-match: supplier region = customer
+    region (nation-level equality is vacuous in the synthetic data). Scale: sale-return join co-partitions on (order, item); the
+    global average is a broadcast scalar."""
+    return _q24_paid(spark, sf_dir, _Q24_BRANDS_1)
+
+
+@_q("tpcds_q24_2", _q24_sql(_Q24_BRANDS_2))
+def tpcds_q24_2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q24 SECOND benchto variant (tpcds/q24_2.sql — VERDICT r09
+    #5: the reference ships both color bands as separate benchmark
+    files; 'pale' vs 'chiffon' is the only diff). Same ssales CTE, the
+    Brand#21-25 band instead of Brand#11-15; everything else — the
+    two-consumer CTE, the 5%-of-average scalar threshold, the exact
+    cents — is ``tpcds_q24``'s."""
+    return _q24_paid(spark, sf_dir, _Q24_BRANDS_2)
+
+
+def _q24_paid(
+    spark: SparkSession, sf_dir: str, brands: tuple[str, ...]
+) -> DataFrame:
+    li, orders, cust, supp, part = _t(
+        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "part")
+    r = (li.filter(F.col("l_returnflag") == "R")
+         .select(F.col("l_orderkey").alias("r_orderkey")).distinct())
+    ssales = (
+        li.filter(F.col("l_returnflag") != "R")
+        .join(r, F.col("l_orderkey") == F.col("r_orderkey"))
+        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .filter(F.col("s_nationkey") % 5 == F.col("c_nationkey") % 5)
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
+        .groupBy(F.col("c_name").alias("c_last_name"),
+                 F.col("s_name").alias("s_store_name"),
+                 F.col("p_brand").alias("i_color"))
+        .agg(_csum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("netpaid"))
+    )
+    from .tpcds import _materialize_cte
+
+    ssales = _materialize_cte(spark, ssales)
+    threshold = ssales.agg((F.avg("netpaid") * 0.05).alias("thr"))
+    out = (
+        ssales.filter(F.col("i_color").isin(*brands))
+        .groupBy("c_last_name", "s_store_name")
+        .agg(F.sum("netpaid").cast("bigint").alias("paid"))
+        .crossJoin(F.broadcast(threshold))
+        .filter(F.col("paid") > F.col("thr"))
+        .select("c_last_name", "s_store_name", "paid")
+        .orderBy(F.asc("c_last_name"), F.asc("s_store_name"))
+    )
+    return out
+
+
+# --- q14_2: same-week year-over-year cross-channel comparison --------------
+
+def _q14_2_items_sql(flag: str) -> str:
+    return f"""
+      SELECT DISTINCT l_partkey FROM lineitem l
+      JOIN orders o ON l.l_orderkey = o.o_orderkey
+      WHERE l.l_returnflag = '{flag}' AND year(o.o_orderdate) BETWEEN 1996 AND 1998"""
+
+
+def _q14_2_year_arm_sql(year: int) -> str:
+    return f"""
+   SELECT p.p_brand AS i_brand,
+          CAST(sum(round(l.l_extendedprice * 100)) AS BIGINT) AS sales_cents,
+          CAST(count(*) AS BIGINT) AS number_sales
+   FROM lineitem l
+   JOIN orders o ON l.l_orderkey = o.o_orderkey
+   JOIN part p ON l.l_partkey = p.p_partkey
+   WHERE year(o.o_orderdate) = {year} AND weekofyear(o.o_orderdate) = 6
+     AND l.l_partkey IN (SELECT l_partkey FROM cross_items)
+   GROUP BY p.p_brand
+   HAVING CAST(sum(round(l.l_extendedprice * 100)) AS BIGINT)
+          > (SELECT average_cents FROM avg_sales)"""
+
+
+@_q(
+    "tpcds_q14_2",
+    f"""
+WITH cross_items AS (
+  {_q14_2_items_sql('N')}
+  INTERSECT
+  {_q14_2_items_sql('A')}
+  INTERSECT
+  {_q14_2_items_sql('R')}
+), avg_sales AS (
+  SELECT CAST(sum(round(l.l_quantity * (l.l_extendedprice / l.l_quantity) * 100)) AS BIGINT) / count(*) AS average_cents
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE year(o.o_orderdate) BETWEEN 1996 AND 1998
+)
+SELECT 'store' AS channel, ty.i_brand,
+       ty.sales_cents AS ty_sales_cents, ty.number_sales AS ty_number_sales,
+       ly.sales_cents AS ly_sales_cents, ly.number_sales AS ly_number_sales
+FROM ({_q14_2_year_arm_sql(1998)}) ty
+JOIN ({_q14_2_year_arm_sql(1997)}) ly ON ty.i_brand = ly.i_brand
+ORDER BY ty.i_brand
+LIMIT 100
+""",
+)
+def tpcds_q14_2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q14 SECOND benchto variant (tpcds/q14_2.sql — VERDICT r09
+    #5): the same cross_items INTERSECT gate and avg_sales scalar
+    threshold as q14_1 (operators/tpcds.py:tpcds_q14), but the final
+    query compares THE SAME CALENDAR WEEK this year vs last year — two
+    gated weekly rollups self-joined on the item attribute. Adaptation:
+    channels = returnflag arms, item attribute = part brand, week =
+    ISO week 6 (both Spark ``weekofyear`` and DuckDB ``weekofyear`` are
+    ISO-8601; week 6 sits mid-quarter, away from the week-53 boundary
+    ambiguity). Scale: cross_items stays a distinct-key INTERSECT
+    (narrow semi-join side), avg_sales a 1-row broadcast, and each year
+    arm is one week-pruned scan + brand rollup — the year-over-year join
+    is brand-cardinality (25 rows)."""
+    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    lo = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+    yrs = lo.filter(F.year("o_orderdate").between(1996, 1998))
+
+    def items(flag: str) -> DataFrame:
+        return (
+            yrs.filter(F.col("l_returnflag") == flag)
+            .select("l_partkey").distinct()
+        )
+
+    cross_items = items("N").intersect(items("A")).intersect(items("R"))
+    avg_sales = yrs.agg(
+        (
+            F.sum(
+                F.round(
+                    F.col("l_quantity")
+                    * (F.col("l_extendedprice") / F.col("l_quantity"))
+                    * 100
+                )
+            ).cast("bigint")
+            / F.count("*")
+        ).alias("average_cents")
+    )
+
+    def year_arm(year: int) -> DataFrame:
+        wk = lo.filter(
+            (F.year("o_orderdate") == year)
+            & (F.weekofyear("o_orderdate") == 6)
+        )
+        return (
+            wk.join(cross_items, "l_partkey", "left_semi")
+            .join(part, F.col("l_partkey") == F.col("p_partkey"))
+            .groupBy(F.col("p_brand").alias("i_brand"))
+            .agg(
+                F.sum(F.round(F.col("l_extendedprice") * 100))
+                .cast("bigint")
+                .alias("sales_cents"),
+                F.count("*").cast("bigint").alias("number_sales"),
+            )
+            .crossJoin(F.broadcast(avg_sales))
+            .filter(F.col("sales_cents") > F.col("average_cents"))
+            .select("i_brand", "sales_cents", "number_sales")
+        )
+
+    ty = year_arm(1998).alias("ty")
+    ly = year_arm(1997).alias("ly")
+    return (
+        ty.join(ly, F.col("ty.i_brand") == F.col("ly.i_brand"))
+        .select(
+            F.lit("store").alias("channel"),
+            F.col("ty.i_brand").alias("i_brand"),
+            F.col("ty.sales_cents").alias("ty_sales_cents"),
+            F.col("ty.number_sales").alias("ty_number_sales"),
+            F.col("ly.sales_cents").alias("ly_sales_cents"),
+            F.col("ly.number_sales").alias("ly_number_sales"),
+        )
+        .orderBy("i_brand")
+        .limit(100)
+    )
+
+
+# --- q23_2: best-customer frequent-item sales per customer name ------------
+
+@_q(
+    "tpcds_q23_2",
+    """
+WITH frequent_items AS (
+  SELECT l.l_partkey AS item_sk
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE year(o.o_orderdate) BETWEEN 1995 AND 1998
+  GROUP BY l.l_partkey, year(o.o_orderdate)
+  HAVING count(*) > 4
+), csales AS (
+  SELECT o.o_custkey, CAST(sum(round(l.l_quantity * (l.l_extendedprice / l.l_quantity) * 100)) AS BIGINT) AS csales
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  WHERE year(o.o_orderdate) BETWEEN 1995 AND 1998
+  GROUP BY o.o_custkey
+), max_sales AS (
+  SELECT max(csales) AS cmax FROM csales
+), best_customers AS (
+  SELECT c2.o_custkey FROM (
+    SELECT o.o_custkey, CAST(sum(round(l.l_extendedprice * 100)) AS BIGINT) AS ssales
+    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    GROUP BY o.o_custkey
+  ) c2, max_sales
+  WHERE c2.ssales * 2 > cmax
+), arm_a AS (
+  SELECT c.c_name AS c_last_name, CAST(sum(round(l.l_extendedprice * 100)) AS BIGINT) AS sales_cents
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  WHERE year(o.o_orderdate) = 1996 AND month(o.o_orderdate) = 2
+    AND l.l_returnflag = 'A'
+    AND l.l_partkey IN (SELECT item_sk FROM frequent_items)
+    AND o.o_custkey IN (SELECT o_custkey FROM best_customers)
+  GROUP BY c.c_name
+), arm_r AS (
+  SELECT c.c_name AS c_last_name, CAST(sum(round(l.l_extendedprice * 100)) AS BIGINT) AS sales_cents
+  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  WHERE year(o.o_orderdate) = 1996 AND month(o.o_orderdate) = 2
+    AND l.l_returnflag = 'R'
+    AND l.l_partkey IN (SELECT item_sk FROM frequent_items)
+    AND o.o_custkey IN (SELECT o_custkey FROM best_customers)
+  GROUP BY c.c_name
+)
+SELECT c_last_name, sales_cents FROM arm_a
+UNION ALL
+SELECT c_last_name, sales_cents FROM arm_r
+ORDER BY c_last_name ASC, sales_cents ASC
+LIMIT 100
+""",
+)
+def tpcds_q23_2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-DS q23 SECOND benchto variant (tpcds/q23_2.sql — VERDICT r09
+    #5): the same frequent_ss_items + best_ss_customer gate CTEs as
+    q23_1 (operators/tpcds.py:tpcds_q23), but the final query reports
+    PER-CUSTOMER-NAME sales from TWO channels UNION ALL'd (reference:
+    catalog + web; adaptation: the 'A' and 'R' returnflag arms), ordered
+    by name then sales. Frequency granularity deviation: q23_1 keeps the
+    reference's per-(item, DAY) count>4, which the synthetic fixture's
+    density makes an empty set (~30 sales/part over 7 years — measured:
+    zero qualifying days at sf0.01); the _2 twin counts per (item, YEAR)
+    so the gate actually gates (1.8k qualifying parts at sf0.01). Scale:
+    the gate CTEs are computed once and feed both arms as broadcastable
+    distinct-key semi-join sides (AQE reuses the exchanges); each arm is
+    one month-pruned fact pass; the final sort is a top-100
+    TakeOrdered."""
+    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
+    lo = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+    years = lo.filter(F.year("o_orderdate").between(1995, 1998))
+    frequent = (
+        years.groupBy("l_partkey", F.year("o_orderdate"))
+        .agg(F.count("*").alias("cnt"))
+        .filter(F.col("cnt") > 4)
+        .select(F.col("l_partkey").alias("item_sk"))
+        .distinct()
+    )
+    csales = years.groupBy("o_custkey").agg(
+        F.sum(
+            F.round(
+                F.col("l_quantity")
+                * (F.col("l_extendedprice") / F.col("l_quantity"))
+                * 100
+            )
+        ).cast("bigint").alias("csales")
+    )
+    cmax = csales.agg(F.max("csales").alias("cmax"))
+    ssales = lo.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("l_extendedprice") * 100))
+        .cast("bigint")
+        .alias("ssales")
+    )
+    best = (
+        ssales.crossJoin(F.broadcast(cmax))
+        .filter(F.col("ssales") * 2 > F.col("cmax"))
+        .select("o_custkey")
+    )
+    month = lo.filter(
+        (F.year("o_orderdate") == 1996) & (F.month("o_orderdate") == 2)
+    )
+
+    def arm(flag: str) -> DataFrame:
+        return (
+            month.filter(F.col("l_returnflag") == flag)
+            .join(frequent, month.l_partkey == frequent.item_sk, "left_semi")
+            .join(best, "o_custkey", "left_semi")
+            .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+            .groupBy(F.col("c_name").alias("c_last_name"))
+            .agg(
+                F.sum(F.round(F.col("l_extendedprice") * 100))
+                .cast("bigint")
+                .alias("sales_cents")
+            )
+        )
+
+    return (
+        arm("A").unionAll(arm("R"))
+        .orderBy(F.asc("c_last_name"), F.asc("sales_cents"))
         .limit(100)
     )

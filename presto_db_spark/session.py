@@ -15,7 +15,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# The fallbacks fit the host: the CPUs this process may run on, and a 48g
+# heap capped at three quarters of physical RAM.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+_DEFAULT_HEAP = f"{min(48 * 1024, _RAM_MB * 3 // 4)}m"
 
 
 def get_spark(app_name: str = "presto_db_spark", cpus: str | None = None) -> SparkSession:
@@ -48,7 +52,7 @@ def get_spark(app_name: str = "presto_db_spark", cpus: str | None = None) -> Spa
         # (unix_micros, window, at_timezone) take the LTZ type.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _DEFAULT_HEAP))
     )
     # SPARK_MASTER (set by spark-submit) wins; otherwise honor an explicit
     # SPARK_GRAFT_MASTER override of any kind, falling back to local[cpus].

@@ -17,6 +17,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession  # noqa: E402
 
 from presto_db_spark.registry import all_oracle_sql, all_queries  # noqa: E402
+from presto_db_spark.session import DEFAULT_CPUS  # noqa: E402
 from tests.oracle_utils import check_query  # noqa: E402
 
 
@@ -45,9 +46,9 @@ def main() -> int:
         i += 1
     qs, os_ = all_queries(), all_oracle_sql()
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
         .appName("subset-check")
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", DEFAULT_CPUS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "24g")
         .config("spark.sql.session.timeZone", "UTC")

@@ -25,7 +25,7 @@ Usage::
     python scripts/full_correctness.py [round_number]   # default 7
 
 Env: SPARK_GRAFT_SF_DIR_CORRECT (default /root/testdata/sf0.01),
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession  # noqa: E402
 
 from presto_db_spark.registry import all_oracle_sql, all_queries  # noqa: E402
+from presto_db_spark.session import DEFAULT_CPUS  # noqa: E402
 from tests.oracle_utils import (  # noqa: E402
     compare,
     driver_canon,
@@ -50,14 +51,13 @@ from tests.oracle_utils import (  # noqa: E402
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_CORRECT", "/root/testdata/sf0.01")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def build_session() -> SparkSession:
     return (
-        SparkSession.builder.master(f"local[{CPUS}]")
+        SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
         .appName("full-correctness-sweep")
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", DEFAULT_CPUS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "16g")
         .config("spark.sql.session.timeZone", "UTC")

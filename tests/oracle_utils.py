@@ -168,3 +168,13 @@ def check_query(spark, name: str, fn, sql: str | None, sf_dir: str) -> list[str]
         return []
     ora_cols, ora_rows = run_oracle(sql, sf_dir)
     return compare(s_cols, s_rows, ora_cols, ora_rows)
+
+
+def split_at(queries: dict, *firsts: str) -> list[list[str]]:
+    """Cut a module's query names, in registration order, into consecutive
+    runs that start at each of ``firsts``; each run is returned sorted.
+    Lets one family module keep a separate test function (and test ids) per
+    batch of queries."""
+    names = list(queries)
+    cuts = [0, *(names.index(f) for f in firsts), len(names)]
+    return [sorted(names[a:b]) for a, b in zip(cuts, cuts[1:])]

@@ -2,14 +2,15 @@ from __future__ import annotations
 
 import pytest
 
-from presto_db_spark.operators import functions_corpus3 as fc3
+from presto_db_spark.operators import functions_corpus as fc
 
 from .oracle_utils import check_query
+from .test_functions_corpus import BATCH3
 
 
-@pytest.mark.parametrize("name", sorted(fc3.QUERIES))
+@pytest.mark.parametrize("name", BATCH3)
 def test_functions3_vs_duckdb(spark, sf_dir, name):
-    problems = check_query(spark, name, fc3.QUERIES[name], fc3.ORACLE.get(name), sf_dir)
+    problems = check_query(spark, name, fc.QUERIES[name], fc.ORACLE.get(name), sf_dir)
     assert not problems, f"{name}: {problems}"
 
 
