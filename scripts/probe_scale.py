@@ -12,22 +12,13 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from presto_db_spark.registry import all_queries  # noqa: E402
+from presto_db_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     names = sys.argv[1:]
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("probe_scale")
     queries = all_queries()
     # PROBE_SFS=0.001,0.01,0.1 widens the decade span: VERDICT r12 #4 —
     # a 100x (sf0.001→sf0.1) triple catches superlinearity a single
