@@ -27,10 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables: always broadcastable at any scale factor
-# (region=5, nation=25 rows regardless of SF — like TPC-H).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":

@@ -48,32 +48,6 @@ def to_unixtime(ts: Column) -> Column:
     return F.unix_micros(ts).cast("double") / 1e6
 
 
-def cosine_similarity_arrays(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float arrays — JVM-side ``aggregate``/``zip_with``.
-
-    Presto's ``cosine_similarity`` takes sparse maps
-    (``pm/operator/scalar/MathFunctions.java``); dense-array form is the
-    100 TB-pipeline variant (embedding columns). Pure expression: stays in
-    whole-stage codegen, no Python.
-    """
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, v: s + v * v))
-    return dot / (na * nb)
-
-
-def ngrams_words(col: Column, n: int) -> Column:
-    """Word n-grams as array<string> (Presto ``ngrams(array, n)`` over words).
-
-    Expression-only: sequence + transform + slice; no Python.
-    """
-    words = F.split(col, r"\s+")
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(0))),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
-    )
-
-
 # ---------------------------------------------------------------------------
 # MySQL <-> Java datetime pattern translation (Presto date_parse/date_format)
 # ---------------------------------------------------------------------------
@@ -231,13 +205,6 @@ _SQL_FUNCTIONS = [
     # Presto truncate(double) -> integer part toward zero (MathFunctions.java).
     "CREATE OR REPLACE TEMPORARY FUNCTION presto_truncate(x DOUBLE) "
     "RETURNS DOUBLE RETURN cast(cast(x as long) as double)",
-    # Presto infinity()/nan()/is_finite/is_infinite.
-    "CREATE OR REPLACE TEMPORARY FUNCTION infinity() RETURNS DOUBLE RETURN double('inf')",
-    "CREATE OR REPLACE TEMPORARY FUNCTION nan() RETURNS DOUBLE RETURN double('nan')",
-    "CREATE OR REPLACE TEMPORARY FUNCTION is_finite(x DOUBLE) RETURNS BOOLEAN "
-    "RETURN NOT (isnan(x) OR abs(x) = double('inf'))",
-    "CREATE OR REPLACE TEMPORARY FUNCTION is_infinite(x DOUBLE) RETURNS BOOLEAN "
-    "RETURN abs(x) = double('inf')",
     # Presto index/cardinality-style helpers already native in Spark.
     # url_extract_* family over parse_url (UrlFunctions.java).
     "CREATE OR REPLACE TEMPORARY FUNCTION url_extract_protocol(u STRING) "

@@ -37,10 +37,12 @@ import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import QueryFn, registrar
+from . import stagecache
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -273,25 +275,6 @@ WHERE CAST(len(list_intersect(ga, gb)) AS DOUBLE)
 """
 
 
-_MINHASH_MH_UDF = None
-_MINHASH_GRAMS_UDF = None
-
-
-def _minhash_mh_pd():
-    """Lazily-built pandas UDF (the decorator needs an active session)."""
-    global _MINHASH_MH_UDF
-    if _MINHASH_MH_UDF is None:
-        _MINHASH_MH_UDF = F.pandas_udf(_minhash_mh_impl, "array<long>")
-    return _MINHASH_MH_UDF
-
-
-def _minhash_grams_pd():
-    global _MINHASH_GRAMS_UDF
-    if _MINHASH_GRAMS_UDF is None:
-        _MINHASH_GRAMS_UDF = F.pandas_udf(_minhash_grams_impl, "array<string>")
-    return _MINHASH_GRAMS_UDF
-
-
 # Worker-process-global word-hash memo: vocabulary repeats across batches
 # and tasks (Heaps' law), and the hash is pure, so caching across the
 # worker's lifetime is safe. Capped so a worker that sees an unbounded
@@ -368,6 +351,10 @@ def _minhash_grams_impl(texts):
     return pd.Series(out_grams)
 
 
+_MINHASH_MH_UDF = F.pandas_udf(_minhash_mh_impl, T.ArrayType(T.LongType()))
+_MINHASH_GRAMS_UDF = F.pandas_udf(_minhash_grams_impl, T.ArrayType(T.StringType()))
+
+
 @_q("dedup_minhash_lsh", _MINHASH_SQL)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-minimal banded LSH.
@@ -407,13 +394,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this row-shape), and the blocks are reclaimed by ContextCleaner when
     # the frame is released. ~140 B/doc means even 10^10 docs store ~1.4 TB
     # across a 1000-executor cluster — MEMORY_AND_DISK-safe.
-    sig_mh = (
-        docs.select("doc_id", _minhash_mh_pd()(F.col("text")).alias("mh"))
+    sig_mh = stagecache.pin(
+        docs.select("doc_id", _MINHASH_MH_UDF(F.col("text")).alias("mh"))
         .select(
             "doc_id",
             *[F.col("mh").getItem(k).alias(f"mh{k}") for k in range(len(MINHASH_PERMS))],
         )
-        .localCheckpoint(eager=False)
     )
     # Narrow band table: one shuffle of ~(8B + 8B + ~40B) rows per band.
     bands = sig_mh.select(
@@ -436,7 +422,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist(): no columnar cache build, no unpersist bookkeeping —
     # ContextCleaner reclaims the blocks when the frame is released
     # (measured ~0.2-0.4 s at sf0.1).
-    pairs = (
+    pairs = stagecache.pin(
         bands.alias("a")
         .join(
             bands.alias("b"),
@@ -446,7 +432,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # Gram strings (the heavy column) are computed ONLY for candidate docs:
     # semi-join the corpus down to ids that appear in some pair, then run
@@ -463,10 +448,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both consumers read the stored rows (same rationale as sig_mh —
     # measured ~0.25 s at sf0.1, and at scale it halves the candidate
     # text decode).
-    cand_grams = (
+    cand_grams = stagecache.pin(
         raw_docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", _minhash_grams_pd()(F.col("text")).alias("grams"))
-        .localCheckpoint(eager=False)
+        .select("doc_id", _MINHASH_GRAMS_UDF(F.col("text")).alias("grams"))
     )
     ga = cand_grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("ga"))
     gb = cand_grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("gb"))
@@ -576,16 +560,14 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     the declarative fixpoint the iterative join computes.
     """
     pairs = dedup_minhash_lsh(spark, sf_dir).select("id_a", "id_b")
-    edges = (
+    edges = stagecache.pin(
         pairs.union(pairs.select(F.col("id_b"), F.col("id_a")))
         .toDF("src", "dst")
-        .localCheckpoint(eager=False)
     )
-    labels = (
+    labels = stagecache.pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(MAX_CC_ITERS):
         msgs = edges.join(labels, edges.dst == labels.node).select(
@@ -598,13 +580,12 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = labels.select(
             "node", "label", F.col("label").alias("old")
         ).unionByName(msgs.withColumn("old", F.lit(None).cast("long")))
-        new_labels = (
+        new_labels = stagecache.pin(
             merged.groupBy("node")
             .agg(F.min("label").alias("label"), F.min("old").alias("old"))
             # r13 opt: lazy — the convergence probe materializes the
             # pin (partitions the LIMIT-1 probe skips are completed by
             # the checkpoint's fill-in pass); one job per round removed
-            .localCheckpoint(eager=False)
         )
         changed = new_labels.filter(F.col("label") < F.col("old")).limit(1).count()
         labels = new_labels.select("node", "label")
@@ -690,15 +671,13 @@ def rank_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = (
+    edges = stagecache.pin(
         pb.select(F.col("s").alias("src"), F.col("p").alias("dst"))
         .unionByName(pb.select(F.col("p").alias("src"), F.col("s").alias("dst")))
-        .localCheckpoint(eager=False)
     )
-    deg = (
+    deg = stagecache.pin(
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count("*").cast("long").alias("deg"))
-        .localCheckpoint(eager=False)
     )
     ranks = deg.select("node", F.lit(PR_SCALE).cast("long").alias("rank"))
     base = F.lit(15 * PR_SCALE // 100).cast("long")
@@ -889,16 +868,15 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE signature pass over all docs (production: existing signatures are
     # read from the persisted index; here both sides derive from the same
     # table so one UDF execution, lineage-cut, feeds both band sides).
-    sig_mh = (
+    sig_mh = stagecache.pin(
         docs.select(
             "doc_id", is_inc.alias("incoming"),
-            _minhash_mh_pd()(F.col("text")).alias("mh"),
+            _MINHASH_MH_UDF(F.col("text")).alias("mh"),
         )
         .select(
             "doc_id", "incoming",
             *[F.col("mh").getItem(k).alias(f"mh{k}") for k in range(len(MINHASH_PERMS))],
         )
-        .localCheckpoint(eager=False)
     )
     bands = sig_mh.select(
         "doc_id", "incoming",
@@ -914,7 +892,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "incoming",
         F.col("bb.band_id").alias("band_id"), F.col("bb.bkey").alias("bkey"),
     )
-    pairs = (
+    pairs = stagecache.pin(
         bands.filter("incoming").alias("i")
         .join(
             bands.filter("NOT incoming").alias("x"),
@@ -923,13 +901,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("i.doc_id").alias("inc_id"), F.col("x.doc_id").alias("ex_id"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     cand_ids = pairs.select(F.explode(F.array("inc_id", "ex_id")).alias("doc_id"))
-    cand_grams = (
+    cand_grams = stagecache.pin(
         raw_docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", _minhash_grams_pd()(F.col("text")).alias("grams"))
-        .localCheckpoint(eager=False)
+        .select("doc_id", _MINHASH_GRAMS_UDF(F.col("text")).alias("grams"))
     )
     gi = cand_grams.select(F.col("doc_id").alias("inc_id"), F.col("grams").alias("gi"))
     gx = cand_grams.select(F.col("doc_id").alias("ex_id"), F.col("grams").alias("gx"))
@@ -1021,13 +997,12 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented trade-off, not a silent gap."""
     raw_docs = load_table(spark, sf_dir, "documents")
     docs = _fanout(raw_docs, spark)
-    sig_mh = (
-        docs.select("doc_id", _minhash_mh_pd()(F.col("text")).alias("mh"))
+    sig_mh = stagecache.pin(
+        docs.select("doc_id", _MINHASH_MH_UDF(F.col("text")).alias("mh"))
         .select(
             "doc_id",
             *[F.col("mh").getItem(k).alias(f"mh{k}") for k in range(len(MINHASH_PERMS))],
         )
-        .localCheckpoint(eager=False)
     )
     bands = sig_mh.select(
         "doc_id",
@@ -1040,7 +1015,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", F.col("bb.band_id").alias("band_id"), F.col("bb.bkey").alias("bkey"))
-    pairs = (
+    pairs = stagecache.pin(
         bands.alias("a")
         .join(
             bands.alias("b"),
@@ -1050,13 +1025,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     cand_ids = pairs.select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
-    cand_grams = (
+    cand_grams = stagecache.pin(
         raw_docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", _minhash_grams_pd()(F.col("text")).alias("grams"))
-        .localCheckpoint(eager=False)
+        .select("doc_id", _MINHASH_GRAMS_UDF(F.col("text")).alias("grams"))
     )
     ga = cand_grams.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("ga"))
     gb = cand_grams.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("gb"))
@@ -1142,9 +1115,9 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval scale and cappable by document frequency.  The measured side is
     the shipping operator itself; the oracle recomputes BOTH sides."""
     docs = load_table(spark, sf_dir, "documents")
-    g = docs.select(
-        "doc_id", F.explode(_minhash_grams_pd()(F.col("text"))).alias("gram")
-    ).localCheckpoint(eager=False)
+    g = stagecache.pin(docs.select(
+        "doc_id", F.explode(_MINHASH_GRAMS_UDF(F.col("text"))).alias("gram")
+    ))
     n = g.groupBy("doc_id").agg(F.count("*").alias("ng"))
     shared = (
         g.alias("a")
@@ -1158,7 +1131,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("sh"))
     )
-    truth = (
+    truth = stagecache.pin(
         shared.join(n.withColumnRenamed("doc_id", "id_a").alias("na"), "id_a")
         .join(
             n.withColumnRenamed("doc_id", "id_b")
@@ -1172,12 +1145,10 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= JACCARD_THRESHOLD
         )
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
-    ap = (
+    ap = stagecache.pin(
         QUERIES["dedup_minhash_lsh"](spark, sf_dir)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     hit = truth.join(ap, ["id_a", "id_b"])
     # one-row aggregates joined lazily (no driver-side count at plan-build
@@ -1566,13 +1537,12 @@ def dedup_cluster_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # insensitive (mins2 is a min-agg; nxt ends in its own distinct), so
     # that exchange moved ~|edges| rows per round for nothing at any
     # scale. Output identical (same fixed point, same signature walk).
-    und = (
+    und = stagecache.pin(
         pairs.select(
             F.least("id_a", "id_b").alias("lo"),
             F.greatest("id_a", "id_b").alias("hi"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     prev_sig: tuple | None = None
     for _ in range(MAX_BIGSTAR_ROUNDS):
@@ -1598,7 +1568,7 @@ def dedup_cluster_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
         # u and all its smaller neighbors to their minimum.
         sym2 = ls.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
         mins2 = sym2.groupBy("u").agg(F.min("v").alias("m"))
-        nxt = (
+        nxt = stagecache.pin(
             sym2.join(mins2, "u")
             .select(F.col("v").alias("a"), "m")
             .unionByName(mins2.select(F.col("u").alias("a"), "m"))
@@ -1607,7 +1577,6 @@ def dedup_cluster_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.least("a", "m").alias("lo"), F.greatest("a", "m").alias("hi")
             )
             .distinct()
-            .localCheckpoint(eager=False)
         )
         row = nxt.agg(
             F.count("*").alias("n"),
@@ -1888,9 +1857,9 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join shape dedup_minhash_lsh ships; the truth side is the
     eval-only inverted-index join (sample it at production scale)."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = docs.select(
-        "doc_id", _minhash_mh_pd()(F.col("text")).alias("mh")
-    ).localCheckpoint(eager=False)
+    sig = stagecache.pin(docs.select(
+        "doc_id", _MINHASH_MH_UDF(F.col("text")).alias("mh")
+    ))
     keyrows = []
     for b, r in LSH_SWEEP_CONFIGS:
         for band in range(b):
@@ -1927,9 +1896,9 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    g = docs.select(
-        "doc_id", F.explode(_minhash_grams_pd()(F.col("text"))).alias("gram")
-    ).localCheckpoint(eager=False)
+    g = stagecache.pin(docs.select(
+        "doc_id", F.explode(_MINHASH_GRAMS_UDF(F.col("text"))).alias("gram")
+    ))
     n = g.groupBy("doc_id").agg(F.count("*").alias("ng"))
     shared = (
         g.alias("a")
@@ -1943,7 +1912,7 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("sh"))
     )
-    truth = (
+    truth = stagecache.pin(
         shared.join(n.withColumnRenamed("doc_id", "id_a"), "id_a")
         .join(
             n.withColumnRenamed("doc_id", "id_b")
@@ -1956,7 +1925,6 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= JACCARD_THRESHOLD
         )
         .select("id_a", "id_b", F.lit(1).alias("is_true"))
-        .localCheckpoint(eager=False)
     )
     per = (
         cand.join(truth, ["id_a", "id_b"], "left")

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import stagecache
+
 
 def global_index(
     df: DataFrame,
@@ -72,11 +74,10 @@ def global_index(
     ranged = df.repartitionByRange(n, *order_cols)
     aggs = [F.count("*").alias("__c")]
     if sum_col is None:
-        local = (
+        local = stagecache.pin(
             ranged.sortWithinPartitions(*order_cols)
             .withColumn("__pid", F.spark_partition_id())
             .withColumn("__mid", F.monotonically_increasing_id())
-            .localCheckpoint(eager=False)
         )
         aggs.append(F.min("__mid").alias("__m0"))
     else:
@@ -84,7 +85,7 @@ def global_index(
         # hashpartitioning(__pid) exchange) would discard it.
         parts = ranged.withColumn("__pid", F.spark_partition_id())
         lw = W.partitionBy("__pid").orderBy(*order_cols)
-        local = (
+        local = stagecache.pin(
             parts.withColumn("__lrn", F.row_number().over(lw))
             .withColumn(
                 "__lcs",
@@ -92,7 +93,6 @@ def global_index(
                     lw.rowsBetween(W.unboundedPreceding, W.currentRow)
                 ),
             )
-            .localCheckpoint(eager=False)
         )
         aggs.append(F.sum(sum_col).alias("__s"))
     counts = local.groupBy("__pid").agg(*aggs)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, small_df
 from ..registry import QueryFn, registrar
+from . import stagecache
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -754,7 +755,7 @@ def events_rfm_scores_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .distrank import global_index, ntile_expr
 
     ev = load_table(spark, sf_dir, "events")
-    base = (
+    base = stagecache.pin(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(
@@ -772,7 +773,6 @@ def events_rfm_scores_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spine); materialize the purchase groupBy once — the same
         # materialize-once rule global_index applies internally (r10
         # review finding: without it, four full event scans per run).
-        .localCheckpoint(eager=False)
     )
 
     def score(metric: str, descending: bool, out: str) -> DataFrame:
@@ -2583,7 +2583,7 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.col("ts").cast("date").alias("d")
     ).agg(F.sum(F.round(F.col("value") * 100)).cast("long").alias("cents"))
     tail_w = W.partitionBy("event_type").orderBy(F.col("d").desc())
-    kept = (
+    kept = stagecache.pin(
         s.select(
             "event_type", "d", "cents", F.row_number().over(tail_w).alias("rd")
         )
@@ -2595,7 +2595,6 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             .over(W.partitionBy("event_type").orderBy("d"))
             .alias("i"),
         )
-        .localCheckpoint(eager=False)
     )
     state = kept.filter(F.col("i") == 1).select(
         "event_type",
@@ -2941,9 +2940,7 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     a constant fan-out, not a quadratic blowup (the same argument as
     the band join); the final table is |types|² rows."""
     ev = load_table(spark, sf_dir, "events")
-    ut = ev.select("user_id", "event_type").distinct().localCheckpoint(
-        eager=False
-    )
+    ut = stagecache.pin(ev.select("user_id", "event_type").distinct())
     sz = ut.groupBy("event_type").agg(F.count("*").cast("long").alias("n_users"))
     a = ut.select("user_id", F.col("event_type").alias("type_a"))
     b = ut.select("user_id", F.col("event_type").alias("type_b"))
@@ -3328,13 +3325,12 @@ def events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),
     )
-    dev = (
+    dev = stagecache.pin(
         s.join(m, "event_type")
         .select(
             "event_type", "d",
             (F.col("n") * F.col("x") - F.col("sx")).cast("long").alias("dv"),
         )
-        .localCheckpoint(eager=False)
     )
     grid = small_df(
         spark,
@@ -3749,17 +3745,14 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = trans.groupBy("from_type").agg(
         F.sum("n").cast("long").alias("row_total")
     )
-    p = (
+    p = stagecache.pin(
         trans.join(totals, "from_type")
         .select(
             "from_type", "to_type",
             F.expr("n * 1000000 div row_total").cast("long").alias("p_e6"),
         )
-        .localCheckpoint(eager=False)
     )
-    states = totals.select(F.col("from_type").alias("state")).localCheckpoint(
-        eager=False
-    )
+    states = stagecache.pin(totals.select(F.col("from_type").alias("state")))
     k = states.count()  # K-bounded scalar (state vocabulary size)
     v = states.select(
         "state", F.lit(1000000 // k).cast("long").alias("v_e6")
@@ -3784,7 +3777,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         if t % 5 == 4:
-            v = v.localCheckpoint(eager=False)
+            v = stagecache.pin(v)
     return (
         v.join(
             prev.select(F.col("state"), F.col("v_e6").alias("pv")), "state"

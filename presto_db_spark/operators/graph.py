@@ -28,6 +28,7 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table, small_df
 from ..registry import QueryFn, registrar
+from . import stagecache
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -105,7 +106,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins are plain hash equi-joins on node keys; the only driver-side
     values are the three scalar counts. The orientation key packs
     (degree, node) into one BIGINT — exact in both engines."""
-    edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = stagecache.pin(_edges(spark, sf_dir))
     deg = (
         edges.select(F.col("x").alias("node"))
         .unionAll(edges.select(F.col("y").alias("node")))
@@ -113,7 +114,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("deg"))
     )
     ordk = deg.select("node", F.expr(_ORD).alias("ok"))
-    oriented = (
+    oriented = stagecache.pin(
         edges.join(
             ordk.withColumnRenamed("node", "x").withColumnRenamed("ok", "okx"),
             "x",
@@ -130,7 +131,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("x"))
             .alias("dst"),
         )
-        .localCheckpoint(eager=False)
     )
     w1, w2, e3 = oriented.alias("w1"), oriented.alias("w2"), oriented.alias("e3")
     tri = (
@@ -209,9 +209,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on surviving pairs only. The lift join brings the single-row
     order count in as a broadcast."""
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(
-        eager=False
-    )
+    baskets = stagecache.pin(li.select("l_orderkey", "l_partkey").distinct())
     n = baskets.agg(
         F.countDistinct("l_orderkey").cast("bigint").alias("n_orders")
     )
@@ -470,21 +468,18 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     round (the standard Spark iterative-algorithm device; at cluster
     scale this is a checkpoint to the shuffle service, not the driver).
     Distances are small exact integers — no float drift between engines."""
-    edges = (
-        _repeat_edges(spark, sf_dir)
-        .localCheckpoint(eager=False)
+    edges = stagecache.pin(_repeat_edges(spark, sf_dir))
+    adj = stagecache.pin(
+        edges.select(F.col("x").alias("u"), F.col("y").alias("w")).unionAll(
+            edges.select(F.col("y").alias("u"), F.col("x").alias("w"))
+        )
     )
-    adj = edges.select(F.col("x").alias("u"), F.col("y").alias("w")).unionAll(
-        edges.select(F.col("y").alias("u"), F.col("x").alias("w"))
-    ).localCheckpoint(eager=False)
     srcs = (
         adj.select(F.col("u").alias("node"))
         .filter(F.col("node") % _BFS_SRC_MOD == 0)
         .distinct()
     )
-    visited = srcs.withColumn("dist", F.lit(0).cast("int")).localCheckpoint(
-        eager=False
-    )
+    visited = stagecache.pin(srcs.withColumn("dist", F.lit(0).cast("int")))
     frontier = srcs
     for d in range(1, _BFS_MAX_DEPTH + 1):
         reached = (
@@ -492,12 +487,10 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("w").alias("node"))
             .distinct()
         )
-        frontier = reached.join(visited, "node", "left_anti").localCheckpoint(
-            eager=False
-        )
-        visited = visited.unionAll(
+        frontier = stagecache.pin(reached.join(visited, "node", "left_anti"))
+        visited = stagecache.pin(visited.unionAll(
             frontier.withColumn("dist", F.lit(d).cast("int"))
-        ).localCheckpoint(eager=False)
+        ))
     return (
         visited.groupBy("dist")
         .agg(F.count("*").cast("long").alias("n_nodes"))
@@ -562,10 +555,7 @@ def graph_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution (count + RA sum ride the same exchange); the non-edge
     filter is a broadcast-able anti-join against the support-filtered
     edge list; the top-k is TakeOrderedAndProject — no global sort."""
-    edges = (
-        _repeat_edges(spark, sf_dir)
-        .localCheckpoint(eager=False)
-    )
+    edges = stagecache.pin(_repeat_edges(spark, sf_dir))
     adj = edges.select(F.col("x").alias("u"), F.col("y").alias("w")).unionAll(
         edges.select(F.col("y").alias("u"), F.col("x").alias("w"))
     )
@@ -648,10 +638,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the same loop runs until no node drops (the emitted
     trajectory shows the fixed point approaching); all counts are exact
     integers."""
-    edges = (
-        _repeat_edges(spark, sf_dir)
-        .localCheckpoint(eager=False)
-    )
+    edges = stagecache.pin(_repeat_edges(spark, sf_dir))
     out = None
     for r in range(1, _KCORE_ROUNDS + 1):
         deg = (
@@ -660,14 +647,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
         )
-        kept = deg.filter(F.col("deg") >= _KCORE_K).select("node").localCheckpoint(
-            eager=False
-        )
-        edges = (
+        kept = stagecache.pin(deg.filter(F.col("deg") >= _KCORE_K).select("node"))
+        edges = stagecache.pin(
             edges.join(kept.withColumnRenamed("node", "x"), "x", "left_semi")
             .join(kept.withColumnRenamed("node", "y"), "y", "left_semi")
             .select("x", "y")
-            .localCheckpoint(eager=False)
         )
         row = (
             kept.agg(F.count("*").cast("long").alias("n_nodes"))
@@ -691,7 +675,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     One round = one equi-join (adj x labels on the neighbor key) + one
     (node, label) count + one node-partitioned row_number — the
     GraphFrames LPA schedule, nothing global, no driver state."""
-    edges = _repeat_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = stagecache.pin(_repeat_edges(spark, sf_dir))
     adj = edges.select(F.col("x").alias("u"), F.col("y").alias("w")).unionByName(
         edges.select(F.col("y").alias("u"), F.col("x").alias("w"))
     )
@@ -844,7 +828,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle-count device); degree mass is one groupBy; everything
     after is |communities| rows with a single-row m broadcast."""
     edges, adj, labels = _lpa_labels(spark, sf_dir)
-    labels = labels.localCheckpoint(eager=False)
+    labels = stagecache.pin(labels)
     deg = adj.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("deg")
     )
@@ -1017,13 +1001,12 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     no convergence probe (fixed sweep, like rank_pagerank's Jacobi).
     Oracle: the same four half-steps unrolled as chained CTEs."""
     li = load_table(spark, sf_dir, "lineitem")
-    e = (
+    e = stagecache.pin(
         li.select(
             F.col("l_suppkey").cast("long").alias("s"),
             F.col("l_partkey").cast("long").alias("p"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
     def norm(df: DataFrame, key: str, col: str) -> DataFrame:
@@ -1033,17 +1016,17 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         # plan was 2577 lines of repeated join/agg trees that Catalyst
         # re-optimized and partially re-executed every run; score tables
         # are |s|/|p| rows, so the materialization itself is trivial).
-        df = df.localCheckpoint(eager=False)
+        df = stagecache.pin(df)
         mx = df.agg(F.max(col).alias("__mx"))
         # 128-bit numerator (DECIMAL(38,0) here / HUGEINT in the oracle):
         # BIGINT would wrap past ~9.2e6 effective degree (ADVICE r11).
-        return df.crossJoin(F.broadcast(mx)).select(
+        return stagecache.pin(df.crossJoin(F.broadcast(mx)).select(
             key,
             F.expr(
                 f"CAST(CAST({col} AS DECIMAL(38,0)) * {HITS_SCALE}"
                 f" div __mx AS BIGINT)"
             ).alias(col),
-        ).localCheckpoint(eager=False)
+        ))
 
     a1 = e.groupBy("p").agg(
         (F.count("*") * HITS_SCALE).cast("long").alias("auth")
@@ -1129,16 +1112,15 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     recount, so the O(sqrt(m)) out-degree bound still caps the join
     fan-out). Output is every node of degree ≥ 2 — row count scales with
     |V|, never |V|²."""
-    edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
-    deg = (
+    edges = stagecache.pin(_edges(spark, sf_dir))
+    deg = stagecache.pin(
         edges.select(F.col("x").alias("node"))
         .unionAll(edges.select(F.col("y").alias("node")))
         .groupBy("node")
         .agg(F.count("*").cast("long").alias("deg"))
-        .localCheckpoint(eager=False)
     )
     ordk = deg.select("node", F.expr(_ORD).alias("ok"))
-    oriented = (
+    oriented = stagecache.pin(
         edges.join(
             ordk.withColumnRenamed("node", "x").withColumnRenamed("ok", "okx"),
             "x",
@@ -1155,7 +1137,6 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("x"))
             .alias("dst"),
         )
-        .localCheckpoint(eager=False)
     )
     w1, w2, e3 = oriented.alias("w1"), oriented.alias("w2"), oriented.alias("e3")
     tri = (
@@ -1268,7 +1249,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented: Fleischer et al. divide-and-conquer)."""
     li = load_table(spark, sf_dir, "lineitem")
     a, b = li.alias("a"), li.alias("b")
-    edges = (
+    edges = stagecache.pin(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1282,7 +1263,6 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # r13 opt: lazy — the pivot collect materializes it (one job
         # instead of two; the bigstar lesson)
-        .localCheckpoint(eager=False)
     )
     pivot = edges.agg(F.min("src")).collect()[0][0]  # one bounded scalar
     if pivot is None:
@@ -1299,12 +1279,10 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def closure(ed: DataFrame, key: str, out: str) -> DataFrame:
-        reached = small_df(spark, [(int(pivot),)], "n bigint").localCheckpoint(
-            eager=False
-        )
+        reached = stagecache.pin(small_df(spark, [(int(pivot),)], "n bigint"))
         frontier = reached
         for _ in range(SCC_MAX_ROUNDS):
-            nxt = (
+            nxt = stagecache.pin(
                 ed.join(frontier, F.col(key) == F.col("n"))
                 .select(F.col(out).alias("n"))
                 .distinct()
@@ -1312,11 +1290,10 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # r13 opt: lazy — the convergence count() materializes
                 # the pin; reached materializes inside the next round's
                 # job (3 scheduled jobs per round -> ~1)
-                .localCheckpoint(eager=False)
             )
             if nxt.count() == 0:
                 return reached
-            reached = reached.unionByName(nxt).localCheckpoint(eager=False)
+            reached = stagecache.pin(reached.unionByName(nxt))
             frontier = nxt
         raise RuntimeError(
             f"graph_scc: reachability did not converge in {SCC_MAX_ROUNDS} rounds"
@@ -1414,14 +1391,13 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the seed catalog. Oracle: the {iters} rounds unrolled as chained
     CTEs."""
     edges = _repeat_edges(spark, sf_dir)
-    adj = (
+    adj = stagecache.pin(
         edges.select(F.col("x").alias("u"), F.col("y").alias("w"))
         .unionByName(edges.select(F.col("y").alias("u"), F.col("x").alias("w")))
-        .localCheckpoint(eager=False)
     )
-    deg = adj.groupBy(F.col("u").alias("node")).agg(
+    deg = stagecache.pin(adj.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("deg")
-    ).localCheckpoint(eager=False)
+    ))
     seed = (F.col("node") % PPR_SEED_MOD == 0)
     ranks = deg.select(
         "node",
@@ -1548,7 +1524,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     ones. Output: surviving edges with their final support, recounted
     on the converged set so both engines emit the identical relation.
     Oracle: the rounds unrolled as chained CTEs."""
-    edges = _repeat_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = stagecache.pin(_repeat_edges(spark, sf_dir))
 
     def support(e: DataFrame) -> DataFrame:
         # degree-ordered orientation: edge points to its higher-(deg, id)
@@ -1562,23 +1538,22 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the wedge join ran 3x per pass via the old 3-way union of tri
         # projections — now a single explode over one tri execution;
         # measured 7.8 -> 3.3 s same-box at sf0.1 with the early exit).
-        deg = (
+        deg = stagecache.pin(
             e.select(F.col("x").alias("u"))
             .unionByName(e.select(F.col("y").alias("u")))
             .groupBy("u")
             .agg(F.count("*").cast("long").alias("d"))
-            .localCheckpoint(eager=False)
         )
         ek = e.join(
             deg.select(F.col("u").alias("x"), F.col("d").alias("dx")), "x"
         ).join(deg.select(F.col("u").alias("y"), F.col("d").alias("dy")), "y")
         kx = F.struct(F.col("dx"), F.col("x"))
         ky = F.struct(F.col("dy"), F.col("y"))
-        oe = ek.select(
+        oe = stagecache.pin(ek.select(
             F.when(kx < ky, F.col("x")).otherwise(F.col("y")).alias("lo"),
             F.when(kx < ky, F.col("y")).otherwise(F.col("x")).alias("hi"),
             F.when(kx < ky, F.col("dy")).otherwise(F.col("dx")).alias("hd"),
-        ).localCheckpoint(eager=False)
+        ))
         o1 = oe.select(
             F.col("lo").alias("a"), F.col("hi").alias("b"),
             F.col("hd").alias("bd"),
@@ -1628,14 +1603,13 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_prev = edges.count()
     sup = None
     for _ in range(KTRUSS_ROUNDS):
-        sup = support(edges).localCheckpoint(eager=False)
-        edges = (
+        sup = stagecache.pin(support(edges))
+        edges = stagecache.pin(
             edges.join(
                 sup.filter(F.col("sup") >= KTRUSS_K - 2).select("x", "y"),
                 ["x", "y"],
                 "left_semi",
             )
-            .localCheckpoint(eager=False)
         )
         n_new = edges.count()
         if n_new == n_prev:
@@ -1762,10 +1736,9 @@ def graph_landmark_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_bfs_distances' loop widened by the source key). Oracle: a
     recursive CTE over the same adjacency, min-dist per (source, node)."""
     edges = _repeat_edges(spark, sf_dir)
-    adj = (
+    adj = stagecache.pin(
         edges.select(F.col("x").alias("u"), F.col("y").alias("w"))
         .unionByName(edges.select(F.col("y").alias("u"), F.col("x").alias("w")))
-        .localCheckpoint(eager=False)
     )
     lm = (
         adj.select(F.col("u").alias("s"))
@@ -1776,16 +1749,15 @@ def graph_landmark_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 opt: all pins lazy — the depth is FIXED (no per-round driver
     # probe), so every materialization can happen inside the single
     # final action instead of 2 scheduled jobs per round at build time
-    visited = frontier.localCheckpoint(eager=False)
+    visited = stagecache.pin(frontier)
     for d in range(1, _CLOSE_MAX_DEPTH + 1):
-        nxt = (
+        nxt = stagecache.pin(
             frontier.join(adj, frontier.node == adj.u)
             .select("s", F.col("w").alias("node"), F.lit(d).alias("dist"))
             .distinct()
             .join(visited.select("s", "node"), ["s", "node"], "left_anti")
-            .localCheckpoint(eager=False)
         )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+        visited = stagecache.pin(visited.unionByName(nxt))
         frontier = nxt
     return (
         visited.groupBy(F.col("s").alias("landmark"))
@@ -1874,16 +1846,16 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (walk, node) frontier against it; walk count ∝ seed density, so
     the frontier never exceeds |seeds| rows per step. Zero driver
     traffic, zero floats."""
-    edges = _repeat_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = stagecache.pin(_repeat_edges(spark, sf_dir))
     adj = edges.select(F.col("x").alias("u"), F.col("y").alias("w")).unionByName(
         edges.select(F.col("y").alias("u"), F.col("x").alias("w"))
     )
     wu = W.partitionBy("u").orderBy("w")
-    adjr = adj.select(
+    adjr = stagecache.pin(adj.select(
         "u", "w",
         F.row_number().over(wu).alias("rn"),
         F.count("*").over(W.partitionBy("u")).alias("deg"),
-    ).localCheckpoint(eager=False)
+    ))
     frontier = (
         adj.filter(F.col("u") % WALK_SRC_MOD == 0)
         .select(F.col("u").alias("walk"), F.col("u").alias("node"))
@@ -1905,7 +1877,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and the next step's join — without it branch w_t of the union
         # re-executes the whole t-join chain, so step t ran (STEPS+1−t)
         # times (10 join executions instead of 4 at STEPS=4; r13 opt)
-        frontier = nxt.localCheckpoint(eager=False)
+        frontier = stagecache.pin(nxt)
         out = out.unionByName(
             frontier.select("walk", F.lit(t).alias("step"), "node")
         )
@@ -1976,7 +1948,7 @@ def graph_partition_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one degree groupBy + two edge-side groupBys, all map-side
     combinable on shard ids; the output is K rows at any data size."""
-    edges = _repeat_edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = stagecache.pin(_repeat_edges(spark, sf_dir))
     m = edges.agg(F.count("*").cast("long").alias("m"))
     deg = (
         edges.select(F.col("x").alias("u"))

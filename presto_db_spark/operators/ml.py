@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..registry import QueryFn, registrar
+from . import stagecache
 from .tpch import _t
 
 QUERIES: dict[str, QueryFn] = {}
@@ -813,7 +814,7 @@ def ml_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT bound: |err| <= 1e6, so G_1 <= 1e6*50*rows — safe past 1e11
     rows."""
     (li,) = _t(spark, sf_dir, "lineitem")
-    pts = li.select(
+    pts = stagecache.pin(li.select(
         F.expr("CAST(round(l_quantity) AS BIGINT) - 25").alias("x1"),
         F.expr(
             "CAST((year(l_shipdate) - 1998) * 12 + month(l_shipdate) - 6"
@@ -827,7 +828,7 @@ def ml_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             ) >= 0,
             1,
         ).otherwise(0).alias("y"),
-    ).localCheckpoint(eager=False)
+    ))
 
     def trunc_div(a: int, b: int) -> int:
         q = abs(a) // b
@@ -1243,14 +1244,13 @@ def ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") % 2).cast("long").alias("y"),
         (5 * q[0] - 3 * q[1] + 2 * q[2] - q[3]).alias("score"),
     )
-    g = (
+    g = stagecache.pin(
         s.groupBy("score")
         .agg(
             F.sum("y").cast("long").alias("pos_n"),
             F.sum(1 - F.col("y")).cast("long").alias("neg_n"),
             F.count("*").cast("long").alias("tot_n"),
         )
-        .localCheckpoint(eager=False)
     )
     r = global_index(g, [F.col("score")], sum_col="tot_n")
     js = spark.range(1, 10).select(F.col("id").alias("j"))
@@ -1352,14 +1352,13 @@ def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") % 2).cast("long").alias("y"),
         (5 * q[0] - 3 * q[1] + 2 * q[2] - q[3]).alias("score"),
     )
-    g = (
+    g = stagecache.pin(
         s.groupBy("score")
         .agg(
             F.sum("y").cast("long").alias("pos_n"),
             F.sum(1 - F.col("y")).cast("long").alias("neg_n"),
             F.count("*").cast("long").alias("tot_n"),
         )
-        .localCheckpoint(eager=False)
     )
     # both cumulative counts from one exchange: pack (pos, neg) into a
     # single BIGINT and cumsum the packed value (see docstring bound).

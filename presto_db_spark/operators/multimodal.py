@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import QueryFn, registrar
+from . import stagecache
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -1128,10 +1129,9 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_bmp_encode_batches, _BMP_SCHEMA)
-    hashed = (
+    hashed = stagecache.pin(
         media.mapInPandas(_phash_decode_batches, _PHASH_FEAT_SCHEMA)
         .select("doc_id", "ahash")
-        .localCheckpoint(eager=False)
     )
     bands = hashed.select(
         "doc_id",
@@ -2029,7 +2029,7 @@ def multimodal_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     media = docs.select("doc_id").mapInPandas(_cdc_encode_batches, _BMP_SCHEMA)
     chunks = media.mapInPandas(_cdc_chunk_batches, _CDC_CHUNK_SCHEMA)
-    chunks = chunks.localCheckpoint(eager=False)
+    chunks = stagecache.pin(chunks)
     tot = chunks.agg(
         F.countDistinct("doc_id").cast("long").alias("total_docs"),
         F.count("*").cast("long").alias("total_chunks"),

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table, small_df
 from ..registry import QueryFn, registrar
+from . import stagecache
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -267,9 +268,9 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # day-index table: the day span is bounded (the docstring contract),
     # so this row_number window is over ~30 rows here / 365 per year
-    idx = daily.select(
+    idx = stagecache.pin(daily.select(
         "cents", F.row_number().over(W.orderBy("d")).alias("rn")
-    ).localCheckpoint(eager=False)
+    ))
     n = idx.agg(F.count("*").cast("long").alias("n"))
     # full n-out-of-n resampling: i = 0..n-1 comes from the DATA (the day
     # span), never a fixed cap — each of the B resamples draws exactly n days
@@ -562,7 +563,7 @@ def events_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("value") * 100)).cast("long").alias("cents")
     )
     wo = W.orderBy("d")
-    c = daily.select(
+    c = stagecache.pin(daily.select(
         "d",
         "cents",
         F.row_number().over(wo).alias("t"),
@@ -573,7 +574,7 @@ def events_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").alias("sn"), F.count("*").alias("n")
             )
         )
-    ).localCheckpoint(eager=False)
+    ))
     scored = c.filter(F.col("t") < F.col("n")).select(
         "t", "d", F.abs(F.col("n") * F.col("st") - F.col("t") * F.col("sn")).alias("dev")
     )

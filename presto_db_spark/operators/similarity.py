@@ -26,9 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import load_table, small_df
 from ..registry import QueryFn, registrar
+from . import stagecache
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -74,38 +76,11 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Left-to-right double-precision fold — same order as the oracle SQL."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda s, x: s + x.cast("double") * x.cast("double"))
-    )
-
-
-_COSINE_UDF = None
-
-
-def _cosine_pd():
-    """Lazily-built pandas UDF (the decorator needs an active session)."""
-    global _COSINE_UDF
-    if _COSINE_UDF is None:
-        _COSINE_UDF = F.pandas_udf(_cosine_impl, "double")
-    return _COSINE_UDF
-
-
 def _cosine_impl(a, b):
     """Arrow-vectorized cosine — the hot-path form.
 
-    The pure-expression fold (``dot``/``norm`` above, kept for composition
-    and documentation of the math) is a CodegenFallback higher-order
-    function: interpreted per element, boxed, and measured to stall for
+    The pure-expression fold (``aggregate`` over ``zip_with``) is a
+    CodegenFallback higher-order function: interpreted per element, boxed, and measured to stall for
     multi-second JIT-deopt bursts on identical plans (0.6 s ↔ 16 s at
     sf0.1). This UDF is the project-brief-sanctioned alternative for the
     dot product: one Arrow batch transfer, then numpy columnwise ops.
@@ -132,8 +107,11 @@ def _cosine_impl(a, b):
     return pd.Series(dots / (np.sqrt(na) * np.sqrt(nb)))
 
 
+_COSINE_UDF = F.pandas_udf(_cosine_impl, T.DoubleType())
+
+
 def cosine(a: Column, b: Column) -> Column:
-    return _cosine_pd()(a, b)
+    return _COSINE_UDF(a, b)
 
 
 _SQL_DOT = (
@@ -161,20 +139,10 @@ def _plane_coeffs(p: int) -> list[float]:
     ]
 
 
-_SRP_BUCKET_UDF = None
-
-
-def _srp_bucket_pd():
-    global _SRP_BUCKET_UDF
-    if _SRP_BUCKET_UDF is None:
-        _SRP_BUCKET_UDF = F.pandas_udf(_srp_bucket_impl, "string")
-    return _SRP_BUCKET_UDF
-
-
 def _srp_bucket_impl(e):
     """All N_PLANES sign-random-projection bits in ONE Arrow batch pass —
     '1'/'0' per plane, concatenated to the bucket key. Sequential per-
-    dimension accumulation (see _cosine_pd) keeps the plane sums
+    dimension accumulation (see _cosine_impl) keeps the plane sums
     bit-identical to the oracle's list_sum fold."""
     import numpy as np
     import pandas as pd
@@ -189,6 +157,9 @@ def _srp_bucket_impl(e):
             sums[p] += x * coeffs[p][d]
     out = np.where(sums >= 0, "1", "0")
     return pd.Series(["".join(out[:, r]) for r in range(n)])
+
+
+_SRP_BUCKET_UDF = F.pandas_udf(_srp_bucket_impl, T.StringType())
 
 
 # --- brute-force exact top-k -----------------------------------------------
@@ -264,15 +235,15 @@ SELECT qid, vec_id, sim, CAST(rn AS INTEGER) AS rn FROM ranked WHERE rn <= {TOP_
 @_q("sim_ann_lsh", _ANN_SQL)
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    bucket = _srp_bucket_pd()(F.col("embedding"))
+    bucket = _SRP_BUCKET_UDF(F.col("embedding"))
     # The bucket UDF fans into BOTH self-join sides, and the join's
     # isnotnull(bucket) pushes through the repartition exchange — without a
     # barrier the Arrow stage executed 4x (2 sides × filter duplication).
     # The lazy localCheckpoint runs it once; both sides read the blocks
     # (same fix as the MinHash signature, plan-pinned below).
-    hashed = emb.select(
+    hashed = stagecache.pin(emb.select(
         "vec_id", "embedding", bucket.alias("bucket")
-    ).localCheckpoint(eager=False)
+    ))
     q = hashed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),
@@ -485,19 +456,19 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: bucketed self-join (equi-join on the LSH
     key — the only shuffle), threshold at 0.35 (the synthetic embeddings have no true dups; the threshold is set where the data has pairs so the operator is exercised non-vacuously)."""
     emb = _emb(spark, sf_dir)
-    bucket = _srp_bucket_pd()(F.col("embedding"))
+    bucket = _SRP_BUCKET_UDF(F.col("embedding"))
     # Same single-execution barrier as sim_ann_lsh: one Arrow bucket pass,
     # both self-join sides read the checkpointed narrow rows.
-    hashed = emb.select(
+    hashed = stagecache.pin(emb.select(
         "vec_id", "embedding", bucket.alias("bucket")
-    ).localCheckpoint(eager=False)
+    ))
     a = hashed.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"), F.col("bucket").alias("ba")
     )
     b = hashed.select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"), F.col("bucket").alias("bb")
     )
-    scored = (
+    scored = stagecache.pin(
         a.join(b, (F.col("ba") == F.col("bb")) & (F.col("id_a") < F.col("id_b")))
         .select("id_a", "id_b", F.round(cosine(F.col("ea"), F.col("eb")), 6).alias("sim"))
         # barrier: PushDownPredicates substitutes the sim alias into the
@@ -505,7 +476,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and once for the projection (observed 2x). The checkpointed frame
         # is (id_a, id_b, sim) per CANDIDATE pair — ∝ bucket collision
         # rate, not the corpus — so the barrier is cheap at any scale.
-        .localCheckpoint(eager=False)
     )
     return scored.filter(F.col("sim") >= 0.35)
 
@@ -833,13 +803,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs the Arrow assignment over the corpus ONCE instead of per branch
     # (the dedup_minhash_lsh idiom; the capped frame is tiny: K * SEM_CAP
     # narrow rows)
-    capped = (
+    capped = stagecache.pin(
         assigned.withColumn(
             "crn", F.row_number().over(W.partitionBy("cid").orderBy("vec_id"))
         )
         .filter(F.col("crn") <= SEM_CAP)
         .drop("crn")
-        .localCheckpoint(eager=False)
     )
     a, b = capped.alias("a"), capped.alias("b")
     pairs = (
@@ -1040,9 +1009,6 @@ FROM ranked WHERE rn <= {TOP_K}
 """
 
 
-_L2_UDF = None
-
-
 def _l2_impl(a, b):
     """Arrow-vectorized exact L2² with the oracle's summation order:
     one vectorized += per dimension, left-to-right."""
@@ -1059,11 +1025,7 @@ def _l2_impl(a, b):
     return pd.Series(acc)
 
 
-def _l2_pd():
-    global _L2_UDF
-    if _L2_UDF is None:
-        _L2_UDF = F.pandas_udf(_l2_impl, "double")
-    return _L2_UDF
+_L2_UDF = F.pandas_udf(_l2_impl, T.DoubleType())
 
 
 def _pq_encode_impl_factory(cb):
@@ -1216,7 +1178,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     reranked = cand.select(
         "qid", "vec_id", "adist",
-        F.round(_l2_pd()(F.col("q_emb"), F.col("c_emb")), 6).alias("dist"),
+        F.round(_L2_UDF(F.col("q_emb"), F.col("c_emb")), 6).alias("dist"),
     )
     w = W.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
     return (
@@ -1392,13 +1354,12 @@ def sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vec_id, cid, 8 longs) — full vectors never leave the scan. The
     # lineage cut keeps the double-UDF projection at a single execution
     # even though the frame feeds the candidate join's build side.
-    assigned_codes = (
+    assigned_codes = stagecache.pin(
         emb.select(
             "vec_id",
             assign_udf(F.col("embedding")).getField("cid").alias("cid"),
             encode(F.col("embedding")).alias("codes"),
         )
-        .localCheckpoint(eager=False)
     )
     # Query probe lists driver-side (identical math ⇒ identical probes).
     q_ap = _assign(pd.Series([[float(x) for x in r.embedding] for r in q_rows]))
@@ -1436,7 +1397,7 @@ def sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(ce, "vec_id")
     reranked = cand_full.select(
         "qid", "vec_id", "adist",
-        F.round(_l2_pd()(F.col("q_emb"), F.col("c_emb")), 6).alias("dist"),
+        F.round(_L2_UDF(F.col("q_emb"), F.col("c_emb")), 6).alias("dist"),
     )
     w = W.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
     return (
@@ -1981,7 +1942,7 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds are a knob; DETERMINISM is the contract pinned here, the
     same trade `rank_pagerank` documents."""
     emb = load_table(spark, sf_dir, "embeddings")
-    x = (
+    x = stagecache.pin(
         emb.select(
             "vec_id", F.posexplode("embedding").alias("pos", "e")
         )
@@ -1990,7 +1951,6 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("pos") + 1).alias("d"),
             F.round(F.col("e").cast("double") * 1000).cast("long").alias("q"),
         )
-        .localCheckpoint(eager=False)
     )
     tdiv = (
         "CASE WHEN ({num}) >= 0 THEN ({num}) div ({den}) "
@@ -2012,11 +1972,10 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint pins ONE execution of the round's w for both its
         # consumers (the max|w| scale and the renormalized v) — the same
         # device part_skyline_pareto uses for its prefix consumers
-        w = (
+        w = stagecache.pin(
             x.join(s, "vec_id")
             .groupBy("d")
             .agg(F.sum(F.col("q") * F.col("sd")).cast("long").alias("w"))
-            .localCheckpoint(eager=False)
         )
         m = w.agg(F.max(F.abs("w")).cast("long").alias("m"))
         v = w.crossJoin(F.broadcast(m)).select(
@@ -2167,9 +2126,9 @@ def train_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow stage executed 4x (2 consumers x filter duplication). The lazy
     # localCheckpoint pins ONE execution (same fix as sim_ann_lsh's
     # bucket UDF, plan-pinned below).
-    assigned = emb.select(
+    assigned = stagecache.pin(emb.select(
         "vec_id", assign_udf(F.col("embedding")).getField("cid").alias("cid")
-    ).localCheckpoint(eager=False)
+    ))
     sized = assigned.groupBy("cid").agg(
         F.count("*").cast("long").alias("cluster_size")
     )
@@ -2751,7 +2710,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     effect (true neighbor in an adjacent cell) is the documented IVF
     recall trade — sim_ann_recall measures it; this op's contract is
     the blocked graph itself."""
-    emb = _emb(spark, sf_dir).localCheckpoint(eager=False)
+    emb = stagecache.pin(_emb(spark, sf_dir))
     nc = emb.agg(
         F.greatest(
             F.lit(KNN_C_MIN), F.expr(f"count(*) div {KNN_CELL_DIV}")
@@ -2766,13 +2725,13 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # summation order as the _l2sq fold and the oracle's list_sum — the
     # module's standing CodegenFallback-HOF avoidance, see _cosine_impl)
     wq = W.partitionBy("vec_id").orderBy("d2", "cid")
-    pts = (
+    pts = stagecache.pin(
         emb.crossJoin(c)
         .select(
             "vec_id",
             "embedding",
             "cid",
-            _l2_pd()(F.col("embedding"), F.col("ce")).alias("d2"),
+            _L2_UDF(F.col("embedding"), F.col("ce")).alias("d2"),
         )
         .withColumn("rnc", F.row_number().over(wq))
         .filter(F.col("rnc") == 1)
@@ -2780,7 +2739,6 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pts feeds BOTH sides of the cell self-join: pin one execution
         # (the plan otherwise runs the whole assignment pass twice —
         # caught by the r12 plan gate's nested-loop count)
-        .localCheckpoint(eager=False)
     )
     # Per-cell matrix kernel (r14, guide §8: decide with small rows, move
     # big rows once). The old cell self-join materialized |cell|² pair
@@ -3057,7 +3015,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe")
     )
-    rel = (
+    rel = stagecache.pin(
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
         .select(
@@ -3067,7 +3025,6 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rel_e6"),
             "embedding",
         )
-        .localCheckpoint(eager=False)
     )
     short = (
         rel.orderBy(F.col("rel_e6").desc(), "vec_id")
@@ -3105,14 +3062,13 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mmr_sequential(spark: SparkSession, rel: DataFrame) -> DataFrame:
     """The r13 incremental-redundancy sequential loop — exact on any
     input; kept as the verification-mismatch fallback."""
-    picked = (
+    picked = stagecache.pin(
         rel.orderBy(F.col("rel_e6").desc(), "vec_id")
         .limit(1)
         .select(
             F.lit(1).alias("pick"), "vec_id", "rel_e6", "embedding",
             F.lit(0).cast("long").alias("red_e6"),
         )
-        .localCheckpoint(eager=False)
     )
     # Incremental redundancy (r13 opt): red_e6 at round k is the max
     # cosine against picks 1..k-1, and only ONE pick is added per round —
@@ -3122,29 +3078,30 @@ def _mmr_sequential(spark: SparkSession, rel: DataFrame) -> DataFrame:
     # shape recomputed ALL picked cosines per round and paid a
     # per-round groupBy(vec_id) exchange. Emitted rows are identical
     # (red_e6 is still the value at pick time).
-    cand = rel.join(picked.select("vec_id"), "vec_id", "left_anti").crossJoin(
-        F.broadcast(picked.select(F.col("embedding").alias("se")))
-    ).select(
-        "vec_id",
-        "rel_e6",
-        "embedding",
-        F.round(cosine(F.col("embedding"), F.col("se")) * 1000000)
-        .cast("long")
-        .alias("red_e6"),
-    ).localCheckpoint(eager=False)
+    cand = stagecache.pin(
+        rel.join(picked.select("vec_id"), "vec_id", "left_anti")
+        .crossJoin(F.broadcast(picked.select(F.col("embedding").alias("se"))))
+        .select(
+            "vec_id",
+            "rel_e6",
+            "embedding",
+            F.round(cosine(F.col("embedding"), F.col("se")) * 1000000)
+            .cast("long")
+            .alias("red_e6"),
+        )
+    )
     for k in range(2, MMR_K + 1):
-        nxt = (
+        nxt = stagecache.pin(
             cand.orderBy(
                 (7 * F.col("rel_e6") - 3 * F.col("red_e6")).desc(), "vec_id"
             )
             .limit(1)
             .select(F.lit(k).alias("pick"), "vec_id", "rel_e6", "embedding",
                     "red_e6")
-            .localCheckpoint(eager=False)
         )
         picked = picked.unionByName(nxt)
         if k < MMR_K:
-            cand = cand.join(
+            cand = stagecache.pin(cand.join(
                 nxt.select("vec_id"), "vec_id", "left_anti"
             ).crossJoin(
                 F.broadcast(nxt.select(F.col("embedding").alias("se")))
@@ -3157,7 +3114,7 @@ def _mmr_sequential(spark: SparkSession, rel: DataFrame) -> DataFrame:
                     F.round(cosine(F.col("embedding"), F.col("se")) * 1000000)
                     .cast("long"),
                 ).alias("red_e6"),
-            ).localCheckpoint(eager=False)
+            ))
     return picked.select(
         F.col("pick").cast("long"),
         "vec_id",
@@ -3233,7 +3190,7 @@ def emb_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(cents))
         .select(
             "vec_id", "cid",
-            _l2_pd()(F.col("embedding"), F.col("ce")).alias("d2"),
+            _L2_UDF(F.col("embedding"), F.col("ce")).alias("d2"),
         )
     )
     wv = W.partitionBy("vec_id").orderBy("d2", "cid")
@@ -3354,7 +3311,7 @@ def emb_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.crossJoin(F.broadcast(cb))
         .select(
             "vec_id", "m",
-            _l2_pd()(
+            _L2_UDF(
                 F.expr(f"slice(embedding, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"),
                 F.col("cw"),
             ).alias("d2"),
@@ -3366,7 +3323,7 @@ def emb_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.crossJoin(F.broadcast(sub))
         .select(
             "vec_id", "m",
-            _l2_pd()(
+            _L2_UDF(
                 F.expr(f"slice(embedding, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"),
                 zero,
             ).alias("en"),

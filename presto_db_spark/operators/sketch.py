@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import QueryFn, registrar
+from . import stagecache
 from .tpch import _t
 
 QUERIES: dict[str, QueryFn] = {}
@@ -944,10 +945,11 @@ def sketch_theta_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         segs.append(
-            seg.select("v", h(F.col("v")).alias("h"))
-            .orderBy("h", "v")
-            .limit(_TH_K)
-            .localCheckpoint(eager=False)
+            stagecache.pin(
+                seg.select("v", h(F.col("v")).alias("h"))
+                .orderBy("h", "v")
+                .limit(_TH_K)
+            )
         )
     ha, hb = segs
     theta = (

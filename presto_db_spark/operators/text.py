@@ -13,10 +13,12 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import QueryFn, registrar
+from . import stagecache
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -65,7 +67,20 @@ def quality_score(col: Column) -> Column:
     return F.round((len_score + punct_score + stop_score) / 3, 6)
 
 
-_FP_UDF = None
+def _fp(texts):
+    import pandas as pd
+
+    mod = 2**50
+    out = []
+    for t in texts:
+        h = 0
+        for ch in t or "":
+            h = (h * 31 + ord(ch)) % mod
+        out.append(h)
+    return pd.Series(out, dtype="int64")
+
+
+_FP_UDF = F.pandas_udf(_fp, T.LongType())
 
 
 def fingerprint(col: Column) -> Column:
@@ -75,22 +90,6 @@ def fingerprint(col: Column) -> Column:
     equivalent per-char aggregate() fold is a CodegenFallback expression:
     interpreted, boxed, and measured to wobble 0.4 s ↔ 4 s under JIT
     profile pollution; the UDF is flat and stable."""
-    global _FP_UDF
-    if _FP_UDF is None:
-
-        def _fp(texts):
-            import pandas as pd
-
-            mod = 2**50
-            out = []
-            for t in texts:
-                h = 0
-                for ch in t or "":
-                    h = (h * 31 + ord(ch)) % mod
-                out.append(h)
-            return pd.Series(out, dtype="int64")
-
-        _FP_UDF = F.pandas_udf(_fp, "long")
     return _FP_UDF(col)
 
 
@@ -1235,9 +1234,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tf explode) with no exchange under it, so ReuseExchange cannot
     # help; materialize through the bookkept stage cache so a re-invocation
     # releases the previous handle (bare persist leaked blocks, r13 VERDICT)
-    from presto_db_spark.operators.stagecache import materialize_stage
-
-    d = materialize_stage("text_bm25_topk.words", d)
+    d = stagecache.materialize_stage("text_bm25_topk.words", d)
     dl = d.selectExpr("doc_id", "CAST(size(words) AS BIGINT) AS dl")
     g = d.selectExpr("size(words) AS n").groupBy().agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -1333,26 +1330,17 @@ def text_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Unicode NFC normalization ----------------------------------------------
 
-_NFC_UDF = None
+def _nfc_impl(texts):
+    import unicodedata
+
+    import pandas as pd
+
+    return pd.Series(
+        [None if t is None else unicodedata.normalize("NFC", t) for t in texts]
+    )
 
 
-def _nfc_pd():
-    global _NFC_UDF
-    if _NFC_UDF is None:
-        import unicodedata
-
-        import pandas as pd
-
-        def impl(texts):
-            return pd.Series(
-                [
-                    None if t is None else unicodedata.normalize("NFC", t)
-                    for t in texts
-                ]
-            )
-
-        _NFC_UDF = F.pandas_udf(impl, "string")
-    return _NFC_UDF
+_NFC_UDF = F.pandas_udf(_nfc_impl, T.StringType())
 
 
 _NFC_SQL = """
@@ -1396,7 +1384,7 @@ def text_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("o\u0308"),
     )
     d = docs.select("doc_id", raw.alias("raw"))
-    n = d.withColumn("nfc", _nfc_pd()(F.col("raw")))
+    n = d.withColumn("nfc", _NFC_UDF(F.col("raw")))
     return n.select(
         "doc_id",
         F.length("raw").cast("bigint").alias("n_decomposed"),
@@ -1721,7 +1709,7 @@ def _bpe_train_chain(
     )
     rounds = []
     for r in range(1, n_rounds + 1):
-        enc = enc.localCheckpoint(eager=False)
+        enc = stagecache.pin(enc)
         pairs = (
             enc.select(
                 F.expr(
@@ -1741,7 +1729,7 @@ def _bpe_train_chain(
             )
         )
         w = W.orderBy(F.desc("cnt"), F.asc("pair"))
-        top1 = (
+        top1 = stagecache.pin(
             pairs.groupBy("pair")
             .agg(F.count("*").alias("cnt"))
             .withColumn("rk", F.row_number().over(w))
@@ -1751,7 +1739,6 @@ def _bpe_train_chain(
                 F.expr("element_at(split(pair, chr(3)), 2)").alias("y"),
                 "cnt",
             )
-            .localCheckpoint(eager=False)
         )
         rounds.append(
             top1.select(
@@ -2001,10 +1988,9 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tri"),
     )
-    pairs = (
+    pairs = stagecache.pin(
         tris.groupBy("doc_id", "tri")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
     )
     first_seen = pairs.groupBy("tri").agg(
         F.min("doc_id").cast("long").alias("first_doc")
@@ -2778,11 +2764,10 @@ def text_source_divergence_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(CHI2_VOCAB)
         .select("t")
     )
-    st = (
+    st = stagecache.pin(
         tok.join(F.broadcast(vocab), "t")
         .groupBy("source", "t")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=False)
     )
     n_s = st.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     g = st.groupBy("t").agg(F.sum("c").cast("long").alias("gc"))
@@ -3151,11 +3136,10 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos0", "tok")
     )
     wd = W.partitionBy("doc_id").orderBy("pos0")
-    bg = (
+    bg = stagecache.pin(
         tok.withColumn("w2", F.lead("tok").over(wd))
         .filter(F.col("w2").isNotNull())
         .select(F.col("tok").alias("w1"), "w2")
-        .localCheckpoint(eager=False)
     )
     bgc = bg.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c_xy"))
     uni = bg.groupBy(F.col("w1").alias("w")).agg(

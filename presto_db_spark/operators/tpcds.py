@@ -41,6 +41,7 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import QueryFn, registrar
+from . import stagecache
 from .tpch import _csum, _csum_sql, _msum, _msum_sql, _t
 
 QUERIES: dict[str, QueryFn] = {}
@@ -52,31 +53,14 @@ def _rev():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
-# Persisted-CTE bookkeeping: with cte_materialization_enabled on, q04/q11
-# persist their year_total frame.  A long-lived session invoking them
-# repeatedly must not accumulate cached blocks, so each new materialization
-# releases the previous one (at most ONE outstanding handle), and
-# release_materialized_ctes() lets callers drop it eagerly.
-_MATERIALIZED_CTES: list[DataFrame] = []
-
-
 def _materialize_cte(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Persist ``df`` MEMORY_AND_DISK when the cte_materialization session
-    property is on, unpersisting any previously-materialized CTE first."""
+    """Persist ``df`` when the cte_materialization session property is on.
+
+    Every CTE shares one stage name, so a long-lived session invoking
+    q04/q11/... repeatedly holds at most ONE persisted CTE frame."""
     if spark.conf.get("spark.presto_db.cte.materialize", "false") != "true":
         return df
-    from pyspark import StorageLevel
-
-    release_materialized_ctes()
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _MATERIALIZED_CTES.append(df)
-    return df
-
-
-def release_materialized_ctes() -> None:
-    """Unpersist every CTE frame persisted by cte_materialization_enabled."""
-    while _MATERIALIZED_CTES:
-        _MATERIALIZED_CTES.pop().unpersist()
+    return stagecache.materialize_stage("tpcds.cte", df)
 
 
 _REV_SQL = "l_extendedprice * (1 - l_discount)"
@@ -4445,8 +4429,6 @@ def tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(_csum(F.col("o_totalprice")).alias("year_total"))
         .withColumn("sale_type", F.lit("w"))
     )
-    from .tpcds import _materialize_cte
-
     year_total = _materialize_cte(spark, store.unionByName(web))
 
     def leg(alias, st, yr):
@@ -4974,9 +4956,9 @@ def tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each side's syear filter below the aggregate, making the subplans
     # differ and defeating exchange reuse). The pinned frame is the tiny
     # (item, store, year) grouped relation.
-    cross_sales = cross_sales.filter(
+    cross_sales = stagecache.pin(cross_sales.filter(
         F.col("syear").isin(1996, 1997)
-    ).localCheckpoint(eager=False)
+    ))
     cs1 = cross_sales.filter(F.col("syear") == 1996).alias("cs1")
     cs2 = cross_sales.filter(F.col("syear") == 1997).alias("cs2")
     j = cs1.join(
@@ -5031,11 +5013,11 @@ def _q64_cross_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("p_brand").isin("Brand#11", "Brand#12", "Brand#13",
                                 "Brand#21", "Brand#22", "Brand#23")
     )
-    lif = li.join(
+    lif = stagecache.pin(li.join(
         F.broadcast(fpart.select(F.col("p_partkey").alias("l_partkey"))),
         "l_partkey",
         "left_semi",
-    ).localCheckpoint(eager=False)
+    ))
     l2 = (
         lif.filter(F.col("l_returnflag") == "R")
         .select(F.col("l_orderkey").alias("r_orderkey"),
@@ -6407,8 +6389,6 @@ def _q24_paid(
                  F.col("p_brand").alias("i_color"))
         .agg(_csum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("netpaid"))
     )
-    from .tpcds import _materialize_cte
-
     ssales = _materialize_cte(spark, ssales)
     threshold = ssales.agg((F.avg("netpaid") * 0.05).alias("thr"))
     out = (

@@ -25,10 +25,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import QueryFn, registrar
+from . import stagecache
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
@@ -525,16 +527,6 @@ FROM ranked GROUP BY run_id
 """
 
 
-_HILBERT_UDF = None
-
-
-def _hilbert_pd():
-    global _HILBERT_UDF
-    if _HILBERT_UDF is None:
-        _HILBERT_UDF = F.pandas_udf(_hilbert_impl, "long")
-    return _HILBERT_UDF
-
-
 def _hilbert_impl(x, y):
     """All 16 xy2d levels in ONE Arrow batch pass — vectorized int64
     numpy, rows in parallel, levels sequential. Bit-identical to the
@@ -546,7 +538,7 @@ def _hilbert_impl(x, y):
     chain is 16 stacked Projects of non-cheap CASE trees — measured 3 s
     cold / JIT-deopt-unstable per execution at sf0.1 (5-16 s full-op
     scatter on identical plans), the same pathology that moved the
-    cosine fold to `similarity._cosine_pd`. The Arrow pass is one batch
+    cosine fold to `similarity._COSINE_UDF`. The Arrow pass is one batch
     transfer + 16 vectorized numpy steps (sub-ms per 100k rows)."""
     import numpy as np
     import pandas as pd
@@ -568,6 +560,9 @@ def _hilbert_impl(x, y):
     return pd.Series(D)
 
 
+_HILBERT_UDF = F.pandas_udf(_hilbert_impl, T.LongType())
+
+
 def _hkeyed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders with the exact-integer Hilbert key (same normalized inputs
     as `_zkeyed_orders`); the key is one Arrow batch pass — see
@@ -575,7 +570,7 @@ def _hkeyed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = _zkeyed_orders(spark, sf_dir).select("o_orderkey", "xr", "yr", "x", "y")
     return z.select(
         "o_orderkey", "xr", "yr",
-        _hilbert_pd()(F.col("x"), F.col("y")).alias("hkey"),
+        _HILBERT_UDF(F.col("x"), F.col("y")).alias("hkey"),
     )
 
 
@@ -703,11 +698,10 @@ def part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = parts.groupBy("price_cents").agg(F.max("p_size").alias("gmax"))
 
     n = spark.sparkContext.defaultParallelism
-    ranged = (
+    ranged = stagecache.pin(
         groups.repartitionByRange(n, "price_cents")
         .sortWithinPartitions("price_cents")
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
     )
     lw = (
         W.partitionBy("__pid")
@@ -1207,9 +1201,9 @@ def warehouse_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
             sd,
         )
     )
-    ranged = both.groupBy("layout", "f").agg(
+    ranged = stagecache.pin(both.groupBy("layout", "f").agg(
         F.min("sd").cast("long").alias("lo"), F.max("sd").cast("long").alias("hi")
-    ).localCheckpoint(eager=False)
+    ))
     bounds = (
         ranged.select("layout", F.col("lo").alias("d"), F.lit(1).alias("delta"))
         .unionByName(

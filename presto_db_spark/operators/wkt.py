@@ -33,6 +33,7 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import QueryFn, registrar
+from . import stagecache
 from .tpch import _t
 
 QUERIES: dict[str, QueryFn] = {}
@@ -1104,7 +1105,6 @@ def geo_union_envelope_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     library), identical SQL in DuckDB. Overlapping envelopes are counted
     ONCE — the dissolve semantic that distinguishes union from sum."""
     (nation,) = _t(spark, sf_dir, "nation")
-    from .wkt import st_xs, st_ys
 
     g = nation.selectExpr(
         "n_nationkey AS gid", "n_regionkey AS grp",
@@ -1197,7 +1197,6 @@ def geo_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ESRI's Douglas-Peucker, identical arithmetic in both engines. Pure
     projection — fuses into the scan at any scale."""
     (nation,) = _t(spark, sf_dir, "nation")
-    from .wkt import st_xs, st_ys
 
     g = nation.selectExpr("n_nationkey AS gid", f"{_wkt_pentagon('n_nationkey')} AS w")
     parsed = g.select("gid", st_xs(F.col("w")).alias("xs"), st_ys(F.col("w")).alias("ys"))
@@ -1293,7 +1292,6 @@ def geo_wkt_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MULTIPOINT of its endpoints. Pure projections — fuse into the
     scan."""
     (cust,) = _t(spark, sf_dir, "customer")
-    from .wkt import st_geometry_type, st_xs, st_ys
 
     g = cust.filter(F.col("c_custkey") < 400).selectExpr(
         "c_custkey AS gid",
@@ -1899,13 +1897,6 @@ def st_hull_ccw(hull: Column) -> Column:
     )
 
 
-def st_convex_hull_pts(pts: Column) -> Column:
-    """Hull vertices of a point set, in CCW angular order around the hull
-    centroid (single-expression form — see geo_convex_hull for the staged
-    form that keeps the Catalyst tree linear)."""
-    return st_hull_ccw(st_hull_vertices(pts))
-
-
 # --- oracle SQL building blocks (identical formula text) --------------------
 
 def _sql_ring_pts(key: str, sx: str = "0", sy: str = "0") -> str:
@@ -2106,13 +2097,13 @@ def geo_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 25 rows; warm build+exec 1.06 s staged). Three tiny localCheckpoints
     # (parse / membership / order) keep every subtree named once;
     # arithmetic and its order are unchanged (bit-identical doubles).
-    s0 = withp.localCheckpoint(eager=False)
-    s1 = s0.select(
+    s0 = stagecache.pin(withp)
+    s1 = stagecache.pin(s0.select(
         "gid", "pts", st_hull_vertices(F.col("pts")).alias("hv")
-    ).localCheckpoint(eager=False)
-    s2 = s1.select(
+    ))
+    s2 = stagecache.pin(s1.select(
         "gid", "pts", st_hull_ccw(F.col("hv")).alias("hp")
-    ).localCheckpoint(eager=False)
+    ))
     return s2.select(
         "gid",
         F.size("pts").cast("int").alias("n_points"),
@@ -2164,8 +2155,6 @@ _SY = "(CASE WHEN ({k}) % 3 = 0 THEN 0 WHEN ({k}) % 3 = 1 THEN 40 ELSE 3 END)"
 
 
 def _wkt_pentagon_at(key: str, sx: str, sy: str) -> str:
-    from .wkt import _PENT_DX, _PENT_DY
-
     cx = f"(({key} * 17) % 80 + 10 + {sx})"
     cy = f"(({key} * 29) % 80 + 10 + {sy})"
     pts = [
@@ -2270,21 +2259,21 @@ def geo_predicates2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (inter/self_clip) and parse trees re-explode multiplicatively in
     # the final select (inter_area alone is mentioned 4x). 25-row
     # checkpoints; arithmetic unchanged.
-    parsed = g.select(
+    parsed = stagecache.pin(g.select(
         "gid",
         _open_pts(axs, ays).alias("pa"),
         _open_pts(bxs, bys).alias("pb"),
         st_intersects_rings(axs, ays, bxs, bys).alias("hits"),
         axs.alias("axs"), ays.alias("ays"),
-    ).localCheckpoint(eager=False)
+    ))
     inter = st_area_pts(st_intersection_pts(F.col("pa"), F.col("pb")))
     self_clip = st_area_pts(st_intersection_pts(F.col("pa"), F.col("pa")))
     a_a, a_b = st_area_pts(F.col("pa")), st_area_pts(F.col("pb"))
-    v = parsed.select(
+    v = stagecache.pin(parsed.select(
         "gid", "hits", "axs", "ays",
         a_a.alias("area_a"), a_b.alias("area_b"),
         inter.alias("inter_area"), self_clip.alias("self_clip_area"),
-    ).localCheckpoint(eager=False)
+    ))
     closed_ok = (
         F.element_at("axs", 1) == F.element_at("axs", -1)
     ) & (F.element_at("ays", 1) == F.element_at("ays", -1))
@@ -3029,14 +3018,14 @@ def geo_relate_de9im(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the clip fold (kpts) and the parse trees re-explode into a
     # multiplicative Catalyst tree (de9im alone is mentioned 5x in the
     # final select). 25-row checkpoints; arithmetic unchanged.
-    parsed = g.select(
+    parsed = stagecache.pin(g.select(
         "gid",
         _open_pts(axs, ays).alias("pa"),
         _open_pts(bxs, bys).alias("pb"),
         st_intersects_rings(axs, ays, bxs, bys).alias("hits"),
-    ).localCheckpoint(eager=False)
+    ))
     kpts = st_intersection_pts(F.col("pa"), F.col("pb"))
-    facts = parsed.select(
+    facts = stagecache.pin(parsed.select(
         "gid",
         "hits",
         st_area_pts(F.col("pa")).alias("area_a"),
@@ -3054,8 +3043,8 @@ def geo_relate_de9im(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("ncontact"),
-    ).localCheckpoint(eager=False)
-    m = facts.selectExpr(
+    ))
+    m = stagecache.pin(facts.selectExpr(
         "gid",
         _DE9IM.format(
             inter="inter_area",
@@ -3068,7 +3057,7 @@ def geo_relate_de9im(spark: SparkSession, sf_dir: str) -> DataFrame:
             ncontact="ncontact",
         )
         + " AS de9im",
-    ).localCheckpoint(eager=False)
+    ))
     return m.selectExpr(
         "gid",
         "de9im",

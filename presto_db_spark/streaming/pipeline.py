@@ -554,11 +554,11 @@ def streaming_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-    from ..operators.dedup import N_BANDS, _band_expr, _minhash_mh_pd
+    from ..operators.dedup import N_BANDS, _MINHASH_MH_UDF, _band_expr
 
     stream = documents_stream(spark, sf_dir)
     sig = stream.select(
-        "doc_id", _minhash_mh_pd()(F.col("text")).alias("mh")
+        "doc_id", _MINHASH_MH_UDF(F.col("text")).alias("mh")
     ).select(
         "doc_id", *[F.col("mh").getItem(k).alias(f"mh{k}") for k in range(16)]
     )

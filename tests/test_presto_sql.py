@@ -4,17 +4,29 @@
 
 from __future__ import annotations
 
+import collections
 import math
+import re
 
 import pytest
 
 from presto_db_spark.engine import Engine
+from presto_db_spark.functions import geosql, presto, scalars2
 from presto_db_spark.functions.presto import mysql_to_java_pattern
 
 
 @pytest.fixture(scope="module")
 def engine(spark, sf_dir):
     return Engine(spark, sf_dir=sf_dir)
+
+
+def test_each_sql_function_is_created_once():
+    """Registration runs the statement lists in order, so a second CREATE
+    of a name silently replaces the first; each name must appear once."""
+    create = re.compile(r"CREATE\s+(?:OR\s+REPLACE\s+)?TEMPORARY\s+FUNCTION\s+(\w+)", re.I)
+    stmts = [*presto._SQL_FUNCTIONS, *scalars2.SQL_FUNCTIONS_2, *geosql._GEO_FUNCTIONS]
+    names = [create.match(s.strip()).group(1).lower() for s in stmts]
+    assert [n for n, c in collections.Counter(names).items() if c > 1] == []
 
 
 def test_strpos_one_based(engine):

@@ -1,5 +1,7 @@
-"""Structure of the query registry: one registration decorator, one ``_t``
-table helper, and every family module that defines QUERIES is collected."""
+"""Structure of the query registry and the package: one registration
+decorator, one ``_t`` table helper, every family module that defines
+QUERIES is collected, no module imports itself, and no operator module
+keeps state behind a ``global`` statement."""
 
 from __future__ import annotations
 
@@ -68,3 +70,34 @@ def test_modules_list_every_family_module():
     assert len(registry._MODULES) == len(set(registry._MODULES))
     defining = {m for m, t in _modules().items() if _assigns(t, "QUERIES")}
     assert set(registry._MODULES) == defining
+
+
+def _self_imports(name: str, tree: ast.Module) -> list[int]:
+    """Lines where module ``name`` imports from itself."""
+    package = name.rsplit(".", 1)[0]
+    lines = []
+    for n in ast.walk(tree):
+        if not isinstance(n, ast.ImportFrom):
+            continue
+        if n.level:
+            base = package.rsplit(".", n.level - 1)[0] if n.level > 1 else package
+            target = f"{base}.{n.module}" if n.module else base
+        else:
+            target = n.module
+        if target == name:
+            lines.append(n.lineno)
+    return lines
+
+
+def test_no_module_imports_itself():
+    found = {m: ls for m, t in _modules().items() if (ls := _self_imports(m, t))}
+    assert found == {}
+
+
+def test_no_global_statement_in_operators():
+    found = {
+        m: [n.lineno for n in ast.walk(t) if isinstance(n, ast.Global)]
+        for m, t in _modules().items()
+        if m.startswith("presto_db_spark.operators.")
+    }
+    assert {m: ls for m, ls in found.items() if ls} == {}
